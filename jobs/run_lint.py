@@ -3,8 +3,12 @@
 
 Usage:
   scripts/package.sh   # builds dist/serbian_osm_lint_spark.zip
-  spark-submit --py-files dist/serbian_osm_lint_spark.zip jobs/run_lint.py \
+  spark-submit --driver-memory 8g --py-files dist/serbian_osm_lint_spark.zip jobs/run_lint.py \
       --sf-dir /root/testdata/sf0.01 --out /tmp/lint_out [--resume] [--report]
+
+``--driver-memory`` is required: spark-submit launches the driver JVM
+before this script runs, so no heap set from inside the app — such as
+the default ``session.get_spark`` gives local runs — can apply to it.
 
 The job writes the long verdict table (bucket-partitioned, resumable via
 the manifest in <out>/_manifest) and prints run metrics (S9: the Spark

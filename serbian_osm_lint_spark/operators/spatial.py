@@ -11,9 +11,12 @@ North-rule operators with no direct reference analogue (the reference
   broadcast-joined lookup (pure Catalyst), only boundary-cell rows run
   exact ray-casting in a vectorized numpy pandas UDF. At 10^12 docs the
   UDF touches only the O(perimeter) fraction of rows.
-* J8 — kNN duplicate-name detection: equi-join on (neighbor-ring cell id,
-  name) — explode of 9 cells on the left side keeps it a shuffle-stable
-  equi-join instead of a theta join; ranked by great-circle distance.
+* J8 — kNN duplicate-name detection: :func:`_ring_pairs` is the one place
+  the ring join lives — equi-join on (neighbor-ring cell id, name key);
+  explode of 9 cells on the left side keeps it a shuffle-stable
+  equi-join instead of a theta join — and :func:`_nearest_k` ranks by
+  great-circle distance. The plain, transliterated and capped faces only
+  choose the key, the pair predicate and the output names.
 * J9 — raster-tile ↔ vector-entity assignment: pure slippy-map column
   math then an equi-join-able tile key.
 * A4 — salted two-phase cell aggregation for urban-cell skew: stage 1
@@ -37,7 +40,6 @@ from ..functions.geo import (
     CELL_ZOOM,
     TILE_ZOOM,
     cell_id_col,
-    haversine_km_col,
     sql_cell_id,
     sql_haversine_km,
     sql_tile_x,
@@ -268,6 +270,67 @@ def cell_encode_df(spark, docs, zoom: int = CELL_ZOOM):
     )
 
 
+def _ring_pairs(docs, key: str, cols: dict, zoom: int, cap: int | None = None):
+    """The one J8 ring join: same-``key`` pairs of named entities within
+    the 3×3 neighbor cell ring, with their great-circle ``dist_km``.
+
+    ``cols`` maps column names to per-entity expressions over the flat
+    entity and must include ``key``. Every pair row carries ``doc_id``
+    and the ``cols`` other than ``key`` suffixed ``_a`` (left) and ``_b``
+    (right), then ``key``, then ``dist_km``. With ``cap``, the right side
+    keeps only the first ``cap`` doc_ids per (cell_id, key) bucket."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    ent = with_flat_entity(docs).filter(F.coalesce(F.col("a_name"), F.lit("")) != "")
+    # per-POINT trig hoisted out of the pair join: radians + cos(lat) are
+    # computed once per entity, not once per candidate pair
+    pts = ent.select(
+        "doc_id",
+        *[c.alias(n) for n, c in cols.items()],
+        F.radians("lat").alias("rlat"),
+        F.radians("lon").alias("rlon"),
+        F.cos(F.radians("lat")).alias("clat"),
+        tile_x_col(F.col("lon"), zoom).alias("cx"),
+        tile_y_col(F.col("lat"), zoom).alias("cy"),
+    )
+    carried = ["doc_id"] + [n for n in cols if n != key]
+
+    def side(s, cell_id):
+        return pts.select(
+            *[F.col(n).alias(f"{n}_{s}") for n in carried],
+            key,
+            *[F.col(t).alias(f"{t}_{s}") for t in ("rlat", "rlon", "clat")],
+            cell_id.alias("cell_id"),
+        )
+
+    left = side("a", F.explode(geo.neighbor_cells_col(F.col("cx"), F.col("cy"), zoom)))
+    right = side("b", F.shiftleft(F.col("cx"), zoom) + F.col("cy"))
+    if cap is not None:
+        rn = F.row_number().over(Window.partitionBy("cell_id", key).orderBy("doc_id_b"))
+        right = right.withColumn("rn", rn).filter(F.col("rn") <= cap).drop("rn")
+    dist = geo.haversine_km_hoisted_col(
+        F.col("rlat_a"), F.col("rlon_a"), F.col("clat_a"),
+        F.col("rlat_b"), F.col("rlon_b"), F.col("clat_b"),
+    )
+    return left.join(right, ["cell_id", key]).select(
+        *[f"{n}_{s}" for n in carried for s in ("a", "b")],
+        key,
+        F.round(dist, 6).alias("dist_km"),
+    )
+
+
+def _nearest_k(pairs, a: str, b: str, k: int):
+    """Top ``k`` pairs per ``a`` ordered by ``(dist_km, b)`` — ``b`` is the
+    total tie-break, so the ranking is deterministic — with the int
+    ``rank`` appended."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy(a).orderBy(F.col("dist_km"), F.col(b))
+    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def knn_dup_names_df(spark, docs, k: int = 5, zoom: int = CELL_ZOOM):
     """J8: same-name entity pairs within the 3×3 neighbor cell ring,
     ranked by distance (top-k per left entity).
@@ -276,51 +339,11 @@ def knn_dup_names_df(spark, docs, k: int = 5, zoom: int = CELL_ZOOM):
     on (cell_id, name) → window top-k. Name+cell is well-distributed;
     urban-cell skew is bounded by the ring constant and AQE skew split.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ent = with_flat_entity(docs)
-    # per-POINT trig hoisted out of the pair join (guide §1.2): radians +
-    # cos(lat) are computed once per entity, not once per candidate pair
-    pts = ent.select(
-        "doc_id",
-        F.col("a_name").alias("name"),
-        F.radians("lat").alias("rlat"),
-        F.radians("lon").alias("rlon"),
-        F.cos(F.radians("lat")).alias("clat"),
-        tile_x_col(F.col("lon"), zoom).alias("cx"),
-        tile_y_col(F.col("lat"), zoom).alias("cy"),
-    ).filter(F.coalesce(F.col("name"), F.lit("")) != "")
-    left = pts.select(
-        F.col("doc_id").alias("doc_id_a"),
-        F.col("name"),
-        F.col("rlat").alias("rlat_a"),
-        F.col("rlon").alias("rlon_a"),
-        F.col("clat").alias("clat_a"),
-        F.explode(geo.neighbor_cells_col(F.col("cx"), F.col("cy"), zoom)).alias("cell_id"),
-    )
-    right = pts.select(
-        F.col("doc_id").alias("doc_id_b"),
-        F.col("name"),
-        F.col("rlat").alias("rlat_b"),
-        F.col("rlon").alias("rlon_b"),
-        F.col("clat").alias("clat_b"),
-        (F.shiftleft(F.col("cx"), zoom) + F.col("cy")).alias("cell_id"),
-    )
-    pairs = left.join(right, ["cell_id", "name"]).filter(F.col("doc_id_a") < F.col("doc_id_b"))
-    dist = F.round(
-        geo.haversine_km_hoisted_col(
-            F.col("rlat_a"), F.col("rlon_a"), F.col("clat_a"),
-            F.col("rlat_b"), F.col("rlon_b"), F.col("clat_b"),
-        ),
-        6,
-    )
-    w = Window.partitionBy("doc_id_a").orderBy(F.col("dist_km"), F.col("doc_id_b"))
-    return (
-        pairs.select("doc_id_a", "doc_id_b", "name", dist.alias("dist_km"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    pairs = _ring_pairs(docs, "name", {"name": F.col("a_name")}, zoom)
+    pairs = pairs.filter(F.col("doc_id_a") < F.col("doc_id_b"))
+    return _nearest_k(pairs, "doc_id_a", "doc_id_b", k)
 
 
 def translit_dup_names_df(spark, docs, k: int = 5, zoom: int = CELL_ZOOM):
@@ -337,58 +360,15 @@ def translit_dup_names_df(spark, docs, k: int = 5, zoom: int = CELL_ZOOM):
     the one shuffle key, so the 100 TB behavior is the same
     well-distributed band join. Output: (doc_id_a, doc_id_b, name_a,
     name_b, norm_name, dist_km, rank)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..functions.translit import cyr2lat_col
 
-    ent = with_flat_entity(docs)
-    pts = ent.select(
-        "doc_id",
-        F.col("a_name").alias("name"),
-        F.lower(cyr2lat_col(F.col("a_name"))).alias("norm_name"),
-        F.radians("lat").alias("rlat"),
-        F.radians("lon").alias("rlon"),
-        F.cos(F.radians("lat")).alias("clat"),
-        tile_x_col(F.col("lon"), zoom).alias("cx"),
-        tile_y_col(F.col("lat"), zoom).alias("cy"),
-    ).filter(F.coalesce(F.col("name"), F.lit("")) != "")
-    left = pts.select(
-        F.col("doc_id").alias("doc_id_a"),
-        F.col("name").alias("name_a"),
-        "norm_name",
-        F.col("rlat").alias("rlat_a"),
-        F.col("rlon").alias("rlon_a"),
-        F.col("clat").alias("clat_a"),
-        F.explode(geo.neighbor_cells_col(F.col("cx"), F.col("cy"), zoom)).alias("cell_id"),
-    )
-    right = pts.select(
-        F.col("doc_id").alias("doc_id_b"),
-        F.col("name").alias("name_b"),
-        "norm_name",
-        F.col("rlat").alias("rlat_b"),
-        F.col("rlon").alias("rlon_b"),
-        F.col("clat").alias("clat_b"),
-        (F.shiftleft(F.col("cx"), zoom) + F.col("cy")).alias("cell_id"),
-    )
-    pairs = left.join(right, ["cell_id", "norm_name"]).filter(
+    cols = {"name": F.col("a_name"), "norm_name": F.lower(cyr2lat_col(F.col("a_name")))}
+    pairs = _ring_pairs(docs, "norm_name", cols, zoom).filter(
         (F.col("doc_id_a") < F.col("doc_id_b")) & (F.col("name_a") != F.col("name_b"))
     )
-    dist = F.round(
-        geo.haversine_km_hoisted_col(
-            F.col("rlat_a"), F.col("rlon_a"), F.col("clat_a"),
-            F.col("rlat_b"), F.col("rlon_b"), F.col("clat_b"),
-        ),
-        6,
-    )
-    w = Window.partitionBy("doc_id_a").orderBy(F.col("dist_km"), F.col("doc_id_b"))
-    return (
-        pairs.select(
-            "doc_id_a", "doc_id_b", "name_a", "name_b", "norm_name", dist.alias("dist_km")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _nearest_k(pairs, "doc_id_a", "doc_id_b", k)
 
 
 def sql_translit_dup_names(docs_sql: str, k: int = 5, zoom: int = CELL_ZOOM) -> str:
@@ -441,57 +421,13 @@ def knn_dup_names_capped_df(spark, docs, k: int = 5, zoom: int = CELL_ZOOM, cap:
     deterministic sample — and a bucket that big is itself a dedup
     finding. The DuckDB twin replays the cap exactly, so this stays
     hash-verified. Output: (doc_id, neighbor_id, name, dist_km, rank)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ent = with_flat_entity(docs)
-    pts = ent.select(
-        "doc_id",
-        F.col("a_name").alias("name"),
-        F.radians("lat").alias("rlat"),
-        F.radians("lon").alias("rlon"),
-        F.cos(F.radians("lat")).alias("clat"),
-        tile_x_col(F.col("lon"), zoom).alias("cx"),
-        tile_y_col(F.col("lat"), zoom).alias("cy"),
-    ).filter(F.coalesce(F.col("name"), F.lit("")) != "")
-    left = pts.select(
-        F.col("doc_id"),
-        F.col("name"),
-        F.col("rlat").alias("rlat_a"),
-        F.col("rlon").alias("rlon_a"),
-        F.col("clat").alias("clat_a"),
-        F.explode(geo.neighbor_cells_col(F.col("cx"), F.col("cy"), zoom)).alias("cell_id"),
+    pairs = _ring_pairs(docs, "name", {"name": F.col("a_name")}, zoom, cap=cap)
+    pairs = pairs.filter(F.col("doc_id_a") != F.col("doc_id_b")).withColumnsRenamed(
+        {"doc_id_a": "doc_id", "doc_id_b": "neighbor_id"}
     )
-    wcap = Window.partitionBy("cell_id", "name").orderBy("neighbor_id")
-    right = (
-        pts.select(
-            F.col("doc_id").alias("neighbor_id"),
-            F.col("name"),
-            F.col("rlat").alias("rlat_b"),
-            F.col("rlon").alias("rlon_b"),
-            F.col("clat").alias("clat_b"),
-            (F.shiftleft(F.col("cx"), zoom) + F.col("cy")).alias("cell_id"),
-        )
-        .withColumn("rn", F.row_number().over(wcap))
-        .filter(F.col("rn") <= cap)
-        .drop("rn")
-    )
-    pairs = left.join(right, ["cell_id", "name"]).filter(
-        F.col("doc_id") != F.col("neighbor_id")
-    )
-    dist = F.round(
-        geo.haversine_km_hoisted_col(
-            F.col("rlat_a"), F.col("rlon_a"), F.col("clat_a"),
-            F.col("rlat_b"), F.col("rlon_b"), F.col("clat_b"),
-        ),
-        6,
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("dist_km"), F.col("neighbor_id"))
-    return (
-        pairs.select("doc_id", "neighbor_id", "name", dist.alias("dist_km"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _nearest_k(pairs, "doc_id", "neighbor_id", k)
 
 
 def tile_assignment_df(spark, docs, zoom: int = TILE_ZOOM):

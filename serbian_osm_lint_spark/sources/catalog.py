@@ -88,7 +88,9 @@ N_DOC_BUCKETS = 8
 
 
 def _cache_root() -> str:
-    root = os.environ.get("SPARK_GRAFT_CACHE", "/root/repo/.cache")
+    # default: ``.cache`` beside the package, so each checkout keeps its own
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    root = os.environ.get("SPARK_GRAFT_CACHE", os.path.join(pkg_parent, ".cache"))
     try:
         os.makedirs(root, exist_ok=True)
         return root

@@ -10,10 +10,6 @@ driver artifact. Alternate faces of already-gated operators belong AFTER
 slot 50 (they still run in the local verify replay).
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 #: the 50 driver-gated entries, in registration order. Changing this list
 #: is a DELIBERATE act: add new distinct operators by replacing an
 #: alternate face or (preferably) registering alternates post-cap, then

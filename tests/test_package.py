@@ -1,0 +1,27 @@
+# -*- coding: utf-8 -*-
+"""The spark-submit ``--py-files`` archive is built, never committed:
+``scripts/package.sh`` must produce a zip the package imports from."""
+
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_package_zip_is_importable(tmp_path):
+    subprocess.run(
+        ["sh", os.path.join(ROOT, "scripts", "package.sh")], check=True, capture_output=True
+    )
+    zip_path = os.path.join(ROOT, "dist", "serbian_osm_lint_spark.zip")
+    # fresh interpreter outside the checkout: the zip is the only copy on the path
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import serbian_osm_lint_spark.operators.spatial as m; print(m.__file__)"],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": zip_path},
+        check=True,
+        capture_output=True,
+        text=True,
+    ).stdout.strip()
+    assert out.startswith(zip_path + os.sep), out

@@ -281,12 +281,8 @@ def test_streaming_media_features_equals_batch(spark, tmp_path):
     incrementally arriving payload table (real PNG + stub payloads mixed)
     produces exactly the batch result, and a checkpoint re-run adds
     nothing."""
-    import sys
-
     from serbian_osm_lint_spark.operators import media
     from serbian_osm_lint_spark.streaming import stream
-
-    sys.path.insert(0, "/root/repo/tests")
     from test_dedup_text import _make_png
 
     rows = [

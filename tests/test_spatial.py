@@ -98,9 +98,9 @@ def test_salted_agg_equals_plain(spark):
 
 
 def test_knn_pairs_ordered_and_bounded(spark):
-    from serbian_osm_lint_spark import synth
+    from serbian_osm_lint_spark.sources import catalog
 
-    docs = synth.docs_df(spark, SF_SMALL)
+    docs = catalog.docs_table(spark, SF_SMALL)
     rows = spatial.knn_dup_names_df(spark, docs, k=5).collect()
     assert len(rows) > 0
     per_a = {}
