@@ -348,7 +348,7 @@ def verified_pairs_from_banded(banded, threshold: float, banded_b=None):
     # SHUFFLE_HASH: sort-merge on the band key sorts tens of millions of
     # fat rows (12-long shingle array each) per side — measured at 8 M
     # docs / 16 cores the sort GC-stalls and the join runs 3.7× slower
-    # than hash (89.5 s → 24.5 s, scripts/scaling_bench_stored_pairs.py).
+    # than hash (89.5 s → 24.5 s, scripts/scaling.py stored_pairs).
     # A per-partition hash build over the band buckets never sorts. Note
     # (ADVICE r6): AQE replanning HONORS explicit strategy hints, so this
     # join stays shuffle-hash even when one side would fit the broadcast

@@ -16,6 +16,8 @@ import os
 
 import pandas as pd
 
+from .stream import _run_available_now, write_batch_idempotent
+
 SESSION_GAP_SEC = 1800
 
 OUTPUT_SCHEMA = "user_id long, n_sessions long, n_events long"
@@ -52,8 +54,10 @@ def _update_user(key, pdf_iter, state):
 def stream_sessionize(spark, events_path: str, out_dir: str, checkpoint_dir: str) -> int:
     """Run one AvailableNow pass; state persists in the checkpoint, so a
     later pass over newly arrived files continues the same sessions.
-    Writes the latest per-user counts to ``out_dir`` (overwritten per
-    batch). Returns number of micro-batches executed."""
+    Each micro-batch's updated per-user counts land under
+    ``out_dir/updates/batch_id=<id>`` (replay-safe, see
+    :func:`.stream.write_batch_idempotent`); :func:`read_latest` gives the
+    newest per user. Returns number of micro-batches executed."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -71,26 +75,15 @@ def stream_sessionize(spark, events_path: str, out_dir: str, checkpoint_dir: str
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    batches = []
 
     def sink(batch_df, batch_id):
         # Update-mode batches carry only the users touched in that batch —
-        # append with the batch id; read_latest() takes each user's newest
-        # row (an overwrite of "latest" would drop untouched users).
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            os.path.join(out_dir, "updates")
-        )
-        batches.append(batch_id)
+        # each lands in its own batch_id=<id> partition; read_latest() takes
+        # each user's newest row (an overwrite of "latest" would drop
+        # untouched users).
+        write_batch_idempotent(batch_df, os.path.join(out_dir, "updates"), batch_id)
 
-    q = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return len(batches)
+    return _run_available_now(counts, sink, checkpoint_dir, output_mode="update")
 
 
 #: streaming as-of join output (timestamps as epoch micros: the state
@@ -183,21 +176,11 @@ def stream_asof_join(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    batches = []
 
     def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(os.path.join(out_dir, "enriched"))
-        batches.append(batch_id)
+        write_batch_idempotent(batch_df, os.path.join(out_dir, "enriched"), batch_id)
 
-    q = (
-        enriched.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return len(batches)
+    return _run_available_now(enriched, sink, checkpoint_dir, output_mode="append")
 
 
 def read_latest(spark, out_dir: str):

@@ -27,6 +27,24 @@ def write_batch_idempotent(batch_df, out_dir: str, batch_id: int) -> None:
     )
 
 
+def _run_available_now(stream_df, process_batch, checkpoint_dir: str, output_mode=None) -> int:
+    """Drain ``stream_df`` in one ``Trigger.AvailableNow`` pass, calling
+    ``process_batch(batch_df, batch_id)`` per micro-batch. Returns the
+    number of micro-batches executed in this invocation (0 when the
+    checkpoint says everything was already processed)."""
+    batches = []
+
+    def sink(batch_df, batch_id):
+        process_batch(batch_df, batch_id)
+        batches.append(batch_id)
+
+    writer = stream_df.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return len(batches)
+
+
 def stream_lint_verdicts(spark, docs_path: str, out_dir: str, checkpoint_dir: str, wiki, wd):
     """Run the lint pipeline incrementally over ``docs_path`` (parquet dir).
 
@@ -36,23 +54,12 @@ def stream_lint_verdicts(spark, docs_path: str, out_dir: str, checkpoint_dir: st
     from ..operators.checks import lint_verdicts_df
     from ..schema import DOCS_SCHEMA
 
-    batches = []
-
     def process_batch(batch_df, batch_id):
         out = lint_verdicts_df(batch_df.sparkSession, batch_df, wiki, wd)
         write_batch_idempotent(out, os.path.join(out_dir, "verdicts"), batch_id)
-        batches.append(batch_id)
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .parquet(docs_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    return len(batches)
+    src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_path)
+    return _run_available_now(src, process_batch, checkpoint_dir)
 
 
 def stream_dedup_exact(spark, texts_path: str, out_dir: str, checkpoint_dir: str):
@@ -72,25 +79,18 @@ def stream_dedup_exact(spark, texts_path: str, out_dir: str, checkpoint_dir: str
     from ..functions.text import fingerprint_col
 
     schema = "doc_id long, text string"
-    batches = []
 
     def process_batch(batch_df, batch_id):
         write_batch_idempotent(batch_df, os.path.join(out_dir, "canonical"), batch_id)
-        batches.append(batch_id)
 
-    stream = (
+    src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
         .parquet(texts_path)
         .withColumn("fp", fingerprint_col(F.col("text")))
         .dropDuplicates(["fp"])
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    stream.awaitTermination()
-    return len(batches)
+    return _run_available_now(src, process_batch, checkpoint_dir)
 
 
 def stream_decontaminate(spark, train_path: str, holdout_grams, out_dir: str, checkpoint_dir: str):
@@ -108,24 +108,17 @@ def stream_decontaminate(spark, train_path: str, holdout_grams, out_dir: str, ch
     from ..operators.corpus import contamination_flags_from
 
     schema = "doc_id long, text string"
-    batches = []
 
     def process_batch(batch_df, batch_id):
         flagged = contamination_flags_from(batch_df, holdout_grams)
         write_batch_idempotent(flagged, os.path.join(out_dir, "flags"), batch_id)
-        batches.append(batch_id)
 
-    stream = (
+    src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
         .parquet(train_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    stream.awaitTermination()
-    return len(batches)
+    return _run_available_now(src, process_batch, checkpoint_dir)
 
 
 def stream_near_dup_pairs(
@@ -165,7 +158,6 @@ def stream_near_dup_pairs(
     thr = dedup.JACCARD_THRESHOLD if threshold is None else threshold
 
     schema = "doc_id long, text string"
-    batches = []
 
     def process_batch(batch_df, batch_id):
         arrivals = dedup._shingled_sig_from(batch_df)
@@ -173,19 +165,13 @@ def stream_near_dup_pairs(
             sig_table, thr, sig_b=arrivals, broadcast_b=True
         )
         write_batch_idempotent(pairs, os.path.join(out_dir, "pairs"), batch_id)
-        batches.append(batch_id)
 
-    stream = (
+    src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
         .parquet(texts_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    stream.awaitTermination()
-    return len(batches)
+    return _run_available_now(src, process_batch, checkpoint_dir)
 
 
 def stream_near_dup_pairs_incremental(
@@ -233,7 +219,6 @@ def stream_near_dup_pairs_incremental(
 
     schema = "doc_id long, text string"
     sig_cols = ["doc_id", "shingles_h"] + [f"sig_{i}" for i in range(dedup.N_HASHES)]
-    batches = []
 
     def process_batch(batch_df, batch_id):
         sess = batch_df.sparkSession
@@ -251,19 +236,13 @@ def stream_near_dup_pairs_incremental(
             table_so_far, thr, sig_b=arrived, any_order=True, broadcast_b=True
         )
         write_batch_idempotent(pairs, os.path.join(out_dir, "pairs"), batch_id)
-        batches.append(batch_id)
 
-    stream = (
+    src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
         .parquet(texts_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    stream.awaitTermination()
-    return len(batches)
+    return _run_available_now(src, process_batch, checkpoint_dir)
 
 
 def stream_media_features(spark, payloads_path: str, out_dir: str, checkpoint_dir: str):
@@ -280,26 +259,16 @@ def stream_media_features(spark, payloads_path: str, out_dir: str, checkpoint_di
     from ..operators.media import media_features_from
 
     schema = "doc_id string, media_ref string, payload binary"
-    batches = []
 
     def process_batch(batch_df, batch_id):
         write_batch_idempotent(batch_df, os.path.join(out_dir, "features"), batch_id)
-        batches.append(batch_id)
 
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
         .parquet(payloads_path)
     )
-    stream = (
-        media_features_from(src)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    return len(batches)
+    return _run_available_now(media_features_from(src), process_batch, checkpoint_dir)
 
 
 def stream_ann_pq_incremental(
@@ -350,7 +319,6 @@ def stream_ann_pq_incremental(
     topk = similarity.TOPK if k is None else k
     cents = similarity.data_centroids(spark, base_sf_dir)
     store_cols = ["vec_id", "v", "codes", "vnorm"]
-    batches = []
 
     def process_batch(batch_df, batch_id):
         sess = batch_df.sparkSession
@@ -378,16 +346,10 @@ def stream_ann_pq_incremental(
             topk,
         )
         write_batch_idempotent(result, os.path.join(out_dir, "topk"), batch_id)
-        batches.append(batch_id)
 
-    stream = (
+    src = (
         spark.readStream.schema("vec_id long, embedding array<float>, label int")
         .option("maxFilesPerTrigger", "1")
         .parquet(vectors_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    stream.awaitTermination()
-    return len(batches)
+    return _run_available_now(src, process_batch, checkpoint_dir)

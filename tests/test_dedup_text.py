@@ -6,6 +6,8 @@ import pytest
 
 from conftest import SF_ORACLE, SF_SMALL
 
+from serbian_osm_lint_spark.operators.media_fixtures import make_png
+
 
 def test_exact_dedup_finds_planted_copies(spark):
     from serbian_osm_lint_spark.operators import dedup
@@ -482,34 +484,13 @@ def test_components_chain_converges_in_log_rounds(spark):
     assert rounds <= 12, f"chain needed {rounds} rounds; O(log n) bound broken"
 
 
-def _make_png(w: int, h: int) -> bytes:
-    """Minimal complete PNG (8-bit RGB, black) — pure struct/zlib."""
-    import struct
-    import zlib
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(3 * w) for _ in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
 def test_png_real_decode_through_mapinpandas(spark):
     """VERDICT r3 item 5: the real-decode seam runs on a real byte format —
     a synthesized PNG's dims come from its IHDR header (struct parse),
     not the md5 stub, through the full mapInPandas path."""
     from serbian_osm_lint_spark.operators import media
 
-    png = _make_png(37, 21)
+    png = make_png(37, 21)
     df = spark.createDataFrame(
         [("d1", "img/real.png", bytearray(png)), ("d2", "img/fake", bytearray(b"img/fake"))],
         "doc_id string, media_ref string, payload binary",
@@ -526,7 +507,7 @@ def test_png_header_parse_direct():
 
     from serbian_osm_lint_spark.operators import media
 
-    assert media.try_real_decode(_make_png(1920, 1080)) == (1920, 1080)
+    assert media.try_real_decode(make_png(1920, 1080)) == (1920, 1080)
     with pytest.raises(ValueError):
         media.try_real_decode(b"\x89PNG\r\n\x1a\n" + b"\x00" * 8 + b"XXXX" + b"\x00" * 8)
     with pytest.raises(NotImplementedError):
@@ -725,7 +706,7 @@ try:
         from serbian_osm_lint_spark.operators import media
 
         small_w, small_h = 1 + w % 4096, 1 + h % 4096  # keep PNG payload tiny
-        assert media.try_real_decode(_make_png(small_w, 1)) == (small_w, 1)
+        assert media.try_real_decode(make_png(small_w, 1)) == (small_w, 1)
         assert media.try_real_decode(_make_jpeg(w, h)) == (w, h)
         assert media.try_real_decode(_make_gif(w % 65536 or 1, h % 65536 or 1)) == (
             w % 65536 or 1,
@@ -751,7 +732,7 @@ def test_media_decode_quarantine_mode(spark):
     corrupt = b"\x89PNG\r\n\x1a\n" + b"\x00" * 8 + b"XXXX" + b"\x00" * 8
     df = spark.createDataFrame(
         [("bad", "img/corrupt.png", bytearray(corrupt)),
-         ("ok", "img/good.png", bytearray(_make_png(12, 34)))],
+         ("ok", "img/good.png", bytearray(make_png(12, 34)))],
         "doc_id string, media_ref string, payload binary",
     )
     rows = {r.doc_id: r for r in media.media_features_from(df, on_error="quarantine").collect()}
@@ -777,7 +758,7 @@ def test_quarantine_write_side_channel(spark, tmp_path):
     df = spark.createDataFrame(
         [
             ("bad", "img/corrupt.png", bytearray(corrupt)),
-            ("ok1", "img/good.png", bytearray(_make_png(12, 34))),
+            ("ok1", "img/good.png", bytearray(make_png(12, 34))),
             ("ok2", "img/fake", bytearray(b"img/fake")),
         ],
         "doc_id string, media_ref string, payload binary",

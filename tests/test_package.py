@@ -25,3 +25,17 @@ def test_package_zip_is_importable(tmp_path):
         text=True,
     ).stdout.strip()
     assert out.startswith(zip_path + os.sep), out
+
+
+def test_no_python_file_hardcodes_the_checkout_path():
+    """Scripts and tests find the package relative to themselves; a tree
+    that names its own checkout path imports from (and writes into) that
+    checkout when copied elsewhere."""
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=ROOT, check=True, capture_output=True, text=True
+    ).stdout.split()
+    hits = []
+    for rel in tracked:
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as f:
+            hits += [f"{rel}:{i}" for i, line in enumerate(f, 1) if ROOT in line]
+    assert not hits, hits

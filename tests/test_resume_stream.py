@@ -283,12 +283,12 @@ def test_streaming_media_features_equals_batch(spark, tmp_path):
     nothing."""
     from serbian_osm_lint_spark.operators import media
     from serbian_osm_lint_spark.streaming import stream
-    from test_dedup_text import _make_png
+    from serbian_osm_lint_spark.operators.media_fixtures import make_png
 
     rows = [
-        ("d1", "img/a.png", bytearray(_make_png(40, 30))),
+        ("d1", "img/a.png", bytearray(make_png(40, 30))),
         ("d2", "img/b", bytearray(b"img/b")),
-        ("d3", "img/c.png", bytearray(_make_png(7, 9))),
+        ("d3", "img/c.png", bytearray(make_png(7, 9))),
         ("d4", "img/d", bytearray(b"img/d")),
     ]
     payloads = spark.createDataFrame(
