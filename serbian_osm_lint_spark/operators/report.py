@@ -19,6 +19,8 @@ Spark re-expression of the reference's driver-side dict counting in
 
 from __future__ import annotations
 
+from ..session import local_df
+
 #: check explanations — literal registry replacing the reference's
 #: ``eval(type_check).__doc__`` (src/main.py:84-85).
 CHECK_EXPLANATIONS = {
@@ -85,8 +87,8 @@ def per_check_report_df(spark, verdicts):
     """A3: per check type — total evaluated, total not-OK, explanation."""
     from pyspark.sql import functions as F
 
-    expl = spark.createDataFrame(
-        [(k, v) for k, v in CHECK_EXPLANATIONS.items()], "check_name string, explanation string"
+    expl = local_df(
+        spark, list(CHECK_EXPLANATIONS.items()), "check_name string, explanation string"
     )
     agg = verdicts.groupBy("check_name").agg(
         F.count("*").alias("count_total_checks"),

@@ -8,9 +8,10 @@ North-rule operators with no direct reference analogue (the reference
 * J2 — broadcast point-in-polygon vs the (toy) Serbia admin boundary:
   a driver-computed cell-cover classifies every grid cell as
   INSIDE/OUTSIDE/BOUNDARY; fully-classified cells are answered by a
-  broadcast-joined lookup (pure Catalyst), only boundary-cell rows run
-  exact ray-casting in a vectorized numpy pandas UDF. At 10^12 docs the
-  UDF touches only the O(perimeter) fraction of rows.
+  broadcast-joined lookup, only boundary-cell rows evaluate the exact
+  native ray-cast (one Catalyst parity expression, no Python worker).
+  At 10^12 docs the ray cast touches only the O(perimeter) fraction of
+  rows.
 * J8 — kNN duplicate-name detection: :func:`_ring_pairs` is the one place
   the ring join lives — equi-join on (neighbor-ring cell id, name key);
   explode of 9 cells on the left side keeps it a shuffle-stable
@@ -31,9 +32,10 @@ from __future__ import annotations
 
 import functools
 import math
+import operator
+from decimal import Decimal
 
 import numpy as np
-import pandas as pd
 
 from ..functions import geo
 from ..functions.geo import (
@@ -47,6 +49,7 @@ from ..functions.geo import (
     tile_x_col,
     tile_y_col,
 )
+from ..session import local_df
 from .spans import with_flat_entity
 
 #: toy "Serbia" admin boundary: one concave outer ring + two holes,
@@ -80,12 +83,33 @@ def _edges():
 EDGES = _edges()
 
 
+def _ray_edges():
+    """The edges a horizontal ray can cross, as (y1, x1, y2, x2, dx, dy).
+
+    ``dx``/``dy`` are the exact decimal differences of the vertex
+    literals, rounded once to float — what DuckDB folds the twin's
+    ``(x2 - x1)`` to. A float64 subtraction rounds twice, and on an edge
+    the crossing then lands one ulp off (19.072000000000003 vs 19.072)."""
+    def delta(a, b):
+        return float(Decimal(repr(b)) - Decimal(repr(a)))
+
+    return [
+        (y1, x1, y2, x2, delta(x1, x2), delta(y1, y2))
+        for y1, x1, y2, x2 in EDGES
+        if y1 != y2
+    ]
+
+
+#: the one edge table every exact ray cast reads
+RAY_EDGES = _ray_edges()
+
+
 # ----------------------------------------------------------------- python
 def point_in_polygon_py(lat: float, lon: float) -> bool:
     """Ray-casting parity over all edges (holes included ⇒ XOR for free)."""
     inside = False
-    for y1, x1, y2, x2 in EDGES:
-        if (y1 > lat) != (y2 > lat) and lon < (x2 - x1) * (lat - y1) / (y2 - y1) + x1:
+    for y1, x1, y2, x2, dx, dy in RAY_EDGES:
+        if (y1 > lat) != (y2 > lat) and lon < dx * (lat - y1) / dy + x1:
             inside = not inside
     return inside
 
@@ -147,7 +171,9 @@ def cell_cover(zoom: int = CELL_ZOOM):
     end-to-end latency of the PIP query (r5). The cover depends only on
     the module polygon and the zoom, so it is computed once per process;
     the arithmetic is the same float64 ops as the scalar oracle
-    (:func:`_cell_cover_scalar`), asserted equal in tests."""
+    (:func:`_cell_cover_scalar`), asserted equal in tests — save the
+    oracle's center ray cast, which takes :data:`RAY_EDGES`' exact
+    deltas; a center decided here lies off every edge, so both agree."""
     lats = [p[0] for p in SERBIA_RING]
     lons = [p[1] for p in SERBIA_RING]
     x0, y1_ = geo.tile_xy_py(max(lats), min(lons), zoom)  # y grows south
@@ -181,7 +207,7 @@ def cell_cover(zoom: int = CELL_ZOOM):
         (d1 < 0) & (d2 < 0) & (d3 < 0) & (d4 < 0)
     )
     boundary = (~bbox_miss & ~one_side).any(axis=2)
-    # cell-center ray cast (same guard idiom as _pip_pandas_udf)
+    # cell-center ray cast (horizontal edges guarded by an infinite dy)
     la = ((lat_min + lat_max) / 2)[None, :, None]
     lo = ((lon_min + lon_max) / 2)[:, None, None]
     crosses = ((y1 > la) != (y2 > la)) & (
@@ -199,53 +225,38 @@ def cell_cover(zoom: int = CELL_ZOOM):
 
 
 # ------------------------------------------------------------------ spark
-def _pip_pandas_udf():
-    """Vectorized exact ray-cast over the broadcast edge list (numpy)."""
+def _ray_cast_col(lat, lon):
+    """Exact ray-cast parity as one Catalyst expression: the twin's
+    per-edge CASE terms over :data:`RAY_EDGES`, summed, odd ⇒ inside. A
+    null coordinate crosses nothing, as in the twin."""
     from pyspark.sql import functions as F
 
-    edges = np.array(EDGES)  # closes over module constant; small, re-pickled per task is fine
-
-    @F.pandas_udf("boolean")
-    def pip(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(dtype=np.float64)[:, None]
-        lo = lon.to_numpy(dtype=np.float64)[:, None]
-        y1, x1, y2, x2 = edges[:, 0], edges[:, 1], edges[:, 2], edges[:, 3]
-        crosses = ((y1 > la) != (y2 > la)) & (
-            lo < (x2 - x1) * (la - y1) / np.where(y2 == y1, np.inf, y2 - y1) + x1
-        )
-        return pd.Series(crosses.sum(axis=1) % 2 == 1)
-
-    return pip
+    crossings = [
+        F.when(
+            ((lat < y1) != (lat < y2)) & (lon < F.lit(dx) * (lat - y1) / F.lit(dy) + x1), 1
+        ).otherwise(0)
+        for y1, x1, y2, x2, dx, dy in RAY_EDGES
+    ]
+    return functools.reduce(operator.add, crossings) % 2 == 1
 
 
 def point_in_serbia_df(spark, docs, zoom: int = CELL_ZOOM):
     """J2: ``(doc_id, in_serbia)`` via cover prefilter + exact PIP on
-    boundary cells only. Invariant (tested): ≡ exact PIP on every row."""
+    boundary cells only. Invariant (tested): ≡ exact PIP on every row.
+
+    One scan, one projection: the CASE evaluates the ray cast only for
+    rows whose cell is BOUNDARY; every other row reads its cell status."""
     from pyspark.sql import functions as F
 
-    ent = with_flat_entity(docs).select("doc_id", "lat", "lon")
-    cover = cell_cover(zoom)
-    cover_df = F.broadcast(
-        spark.createDataFrame(
-            [(cid, status) for cid, status in cover.items()], "cell_id long, status string"
-        )
+    cover = local_df(spark, list(cell_cover(zoom).items()), "cell_id long, status string")
+    ent = with_flat_entity(docs).select(
+        "doc_id", "lat", "lon", cell_id_col(F.col("lat"), F.col("lon"), zoom).alias("cell_id")
     )
-    ent = ent.withColumn("cell_id", cell_id_col(F.col("lat"), F.col("lon"), zoom))
-    ent = ent.join(cover_df, "cell_id", "left")
-    pip = _pip_pandas_udf()
-    # Split decided/boundary BEFORE the UDF: a `when(..., pip(...))`
-    # projection would extract ArrowEvalPython above the CASE and run the
-    # Python batch for EVERY row; the filter-union shape guarantees the
-    # UDF only ever sees the O(perimeter) boundary-cell rows.
-    decided = ent.filter(F.coalesce(F.col("status"), F.lit("OUT")) != "BOUNDARY").select(
-        "doc_id", (F.col("status") == "IN").alias("in_serbia")
+    status = F.col("status")
+    in_serbia = F.when(status == "BOUNDARY", _ray_cast_col(F.col("lat"), F.col("lon")))
+    return ent.join(F.broadcast(cover), "cell_id", "left").select(
+        "doc_id", in_serbia.otherwise(F.coalesce(status == "IN", F.lit(False))).alias("in_serbia")
     )
-    boundary = ent.filter(F.col("status") == "BOUNDARY").select(
-        "doc_id", pip(F.col("lat"), F.col("lon")).alias("in_serbia")
-    )
-    return decided.select(
-        "doc_id", F.coalesce(F.col("in_serbia"), F.lit(False)).alias("in_serbia")
-    ).unionByName(boundary)
 
 
 def point_in_serbia_exact_df(spark, docs):
@@ -253,8 +264,7 @@ def point_in_serbia_exact_df(spark, docs):
     from pyspark.sql import functions as F
 
     ent = with_flat_entity(docs).select("doc_id", "lat", "lon")
-    pip = _pip_pandas_udf()
-    return ent.select("doc_id", pip(F.col("lat"), F.col("lon")).alias("in_serbia"))
+    return ent.select("doc_id", _ray_cast_col(F.col("lat"), F.col("lon")).alias("in_serbia"))
 
 
 def cell_encode_df(spark, docs, zoom: int = CELL_ZOOM):

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from ..functions.geo import haversine_km_col, sql_haversine_km
 from ..functions.translit import has_cyrillic_col, sql_has_cyrillic
+from ..session import local_df
 from ..synth import CYR_NAMES, HOT2_LAT0, HOT2_LON0, HOT_LAT0, HOT_LON0
 from .checks import APPLICABLE_PLACES, DEFAULT_MAPS
 from .spans import with_flat_entity
@@ -99,9 +100,9 @@ def wiki_guess_df(spark, docs, wikipedia_mode: str = "missing", maps=DEFAULT_MAP
     from pyspark.sql import functions as F
 
     pages = F.broadcast(
-        spark.createDataFrame(GUESS_PAGES, "title string, is_disambig boolean, lat double, lon double")
+        local_df(spark, GUESS_PAGES, "title string, is_disambig boolean, lat double, lon double")
     )
-    links = F.broadcast(spark.createDataFrame(GUESS_LINKS, "parent string, ord int, child string"))
+    links = F.broadcast(local_df(spark, GUESS_LINKS, "parent string, ord int, child string"))
 
     ent = with_flat_entity(docs)
     maps_structs = F.array(

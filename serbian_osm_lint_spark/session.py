@@ -4,12 +4,30 @@
 AQE on (runtime re-plan + skew-join splitting), shuffle partitions sized
 to cores for local mode (a 1000-executor cluster would set this to
 ~2-3× total cores or rely on AQE coalescing), UTC session TZ (oracle
-comparability), Arrow enabled for the pandas-UDF geometry paths.
+comparability), Arrow enabled for the pandas-UDF paths. Defaults follow
+the box: the core count comes from the process's CPU affinity and the
+default heap never asks for more than 60% of physical memory.
 """
 
 from __future__ import annotations
 
 import os
+
+#: share of physical memory the default driver heap may take
+HEAP_SHARE = 0.6
+
+
+def default_heap_gb(cpus: int, phys_bytes: int) -> int:
+    """Default driver heap in GB: 0.5 GB per task slot, at least 8, but
+    never more than :data:`HEAP_SHARE` of ``phys_bytes`` (and at least 1)."""
+    cap = max(1, int(HEAP_SHARE * phys_bytes / 2**30))
+    return min(max(8, cpus // 2), cap)
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -25,7 +43,7 @@ def get_spark(
     from pyspark.sql import SparkSession
 
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -67,9 +85,24 @@ def get_spark(
         # 32-core executor slice would get), not a constant: the r4-era 8g
         # was sized at sf0.1, and the kNN window sort's volume grows
         # quadratically with the corpus (the 100×-proxy harness already
-        # needs 24g). SPARK_DRIVER_MEM still overrides.
-        default_mem = f"{max(8, cpus // 2)}g"
+        # needs 24g), capped by the box's memory. SPARK_DRIVER_MEM still
+        # overrides.
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        default_mem = f"{default_heap_gb(cpus, phys)}g"
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", default_mem)
         ).config("spark.driver.extraJavaOptions", g1)
     return builder.getOrCreate()
+
+
+def local_df(spark, rows, schema: str):
+    """A small constant table whose rows travel inside the plan
+    (``LocalRelation``), built through Arrow. ``createDataFrame`` over a
+    Python list gives an RDD scan instead, which Python workers
+    unpickle on every execution of every plan that reads it."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.table(dict(zip(struct.names, map(list, zip(*rows)))))
+    return spark.createDataFrame(table, struct)

@@ -6,6 +6,8 @@ splits the hot cell, the kNN join stays an equi-join."""
 import io
 import contextlib
 
+import pytest
+
 from conftest import SF_SMALL
 
 
@@ -330,3 +332,42 @@ def test_multi_signal_edge_union_is_two_bucketed_equijoins(spark):
     assert "Union" in plan
     joins = sum(plan.count(j) for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
     assert joins >= 2  # one bucketed equi-join per signal
+
+
+def _lint_map_ops():
+    """The read ops of the ``lint_map`` workload, by name: each a
+    ``spark -> DataFrame`` over the stored sf0.001 tables."""
+    from serbian_osm_lint_spark.operators import report, spatial
+    from serbian_osm_lint_spark.plans import lint_pipeline
+    from serbian_osm_lint_spark.sources import catalog
+
+    def verdicts(spark):
+        return lint_pipeline.build_verdicts(spark, SF_SMALL)
+
+    def on_docs(fn):
+        return lambda spark: fn(spark, catalog.docs_table(spark, SF_SMALL))
+
+    return {
+        "lint_pipeline.build_verdicts": verdicts,
+        "report.per_map_report": lambda s: report.per_map_report_df(verdicts(s)),
+        "report.summary_report": lambda s: report.summary_report_df(verdicts(s)),
+        "report.per_check_report": lambda s: report.per_check_report_df(s, verdicts(s)),
+        "spatial.point_in_serbia": on_docs(spatial.point_in_serbia_df),
+        "spatial.knn_dup_names": on_docs(spatial.knn_dup_names_df),
+        "spatial.tile_assignment": on_docs(spatial.tile_assignment_df),
+        "spatial.cell_counts_salted": on_docs(spatial.cell_counts_salted_df),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_lint_map_ops()))
+def test_lint_map_read_path_runs_no_python(spark, op):
+    """No Python worker on the lint_map read path: neither a Python UDF
+    node nor a scan of a Python-built RDD (which workers unpickle on
+    every execution) in the optimized or the executed plan."""
+    df = _lint_map_ops()[op](spark)
+    df.collect()  # the executed plan is AQE's final plan
+    qe = df._jdf.queryExecution()
+    for phase, plan in (("optimized", qe.optimizedPlan()), ("executed", qe.executedPlan())):
+        text = plan.toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "LogicalRDD", "ExistingRDD"):
+            assert node not in text, (op, phase, node)

@@ -74,6 +74,51 @@ def test_boundary_points_on_polygon_edge(spark):
         assert fast[f"p{i}"] == spatial.point_in_polygon_py(44.5, round(lon, 6))
 
 
+def _on_edge_points():
+    """Key 43068's (44.492, 19.072) plus the 0.001° latitude grid of
+    points on every non-horizontal edge, each longitude the exact decimal
+    crossing rounded to 9 places: the inputs where a ray cast's rounding
+    decides containment."""
+    from decimal import Decimal
+
+    pts = [("k43068", 44.492, 19.072)]
+    for ei, (y1, x1, y2, x2) in enumerate(spatial.EDGES):
+        if y1 == y2:
+            continue
+        dy1, dx1 = Decimal(repr(y1)), Decimal(repr(x1))
+        slope = (Decimal(repr(x2)) - dx1) / (Decimal(repr(y2)) - dy1)
+        lo, hi = sorted((round(y1 * 1000), round(y2 * 1000)))
+        for k in range(lo, hi + 1):
+            lat = Decimal(k) / 1000
+            pts.append((f"e{ei}_{k}", float(lat), float(round(dx1 + slope * (lat - dy1), 9))))
+    return pts
+
+
+def test_edge_points_match_duckdb_twin(spark):
+    """Points lying exactly on polygon edges: both Spark faces and the
+    Python oracle must classify every one as the DuckDB twin does. The
+    twin folds ``(x2 - x1)`` as a decimal, so a ray cast with float64
+    deltas lands one ulp off on some of these (19.072000000000003 vs
+    19.072 for key 43068)."""
+    import duckdb
+    import pandas as pd
+
+    pts = _on_edge_points()
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame(pts, columns=["doc_id", "lat", "lon"]))
+    twin = dict(con.execute(spatial.sql_point_in_serbia("SELECT * FROM pts")).fetchall())
+    con.close()
+    assert twin["k43068"] and len(twin) == len(pts)
+
+    docs = make_docs(spark, [(d, {"place": "city", "name": "x"}, (la, lo)) for d, la, lo in pts])
+    fast = dict(spatial.point_in_serbia_df(spark, docs).collect())
+    exact = dict(spatial.point_in_serbia_exact_df(spark, docs).collect())
+    py = {d: spatial.point_in_polygon_py(la, lo) for d, la, lo in pts}
+    for name, got in (("prefiltered", fast), ("exact", exact), ("python", py)):
+        wrong = sorted(d for d in twin if got[d] != twin[d])
+        assert not wrong, (name, len(wrong), wrong[:5])
+
+
 def test_salted_agg_equals_plain(spark):
     from pyspark.sql import functions as F
 
