@@ -260,11 +260,14 @@ def oracle_sql() -> dict[str, str]:
     for name in q29.ALL_PIPELINES:
         o[f"sparql_{name}"] = q29.sql_pipeline(d, name)
     o["knn_dup_names_capped"] = spatial.sql_knn_dup_names_capped(d)
-    o["minhash_lsh_pairs_stored"] = dedup.sql_minhash_lsh_pairs_stored()
-    o["simhash_near_dups_stored"] = dedup.sql_simhash_near_dups_stored()
-    o["dedup_components_multi_stored"] = dedup.sql_dedup_components_multi_stored()
-    o["ann_ivf_topk_stored"] = similarity.sql_ann_ivf_topk_stored()
-    o["embedding_near_dups_stored"] = dedup.sql_embedding_near_dups_stored()
+    # storage topology is invisible to semantics: each stored face shares
+    # its recompute face's twin, so the gate proves the stored table
+    # reproduces the recompute face
+    o["minhash_lsh_pairs_stored"] = dedup.sql_minhash_lsh_pairs()
+    o["simhash_near_dups_stored"] = dedup.sql_simhash_near_dups()
+    o["dedup_components_multi_stored"] = dedup.sql_dedup_components_multi()
+    o["ann_ivf_topk_stored"] = similarity.sql_ann_ivf_topk()
+    o["embedding_near_dups_stored"] = dedup.sql_embedding_near_dups()
     o["ann_pq_topk"] = similarity.sql_ann_pq_topk()
     o["ann_pq_topk_stored"] = similarity.sql_ann_pq_topk()
     return o

@@ -260,12 +260,7 @@ def main():
         pv = spark.read.parquet(os.path.join(out, "embeddings.parquet")).select(
             "vec_id", similarity._to_double(F.col("embedding")).alias("v")
         )
-        return pv.select(
-            "vec_id",
-            "v",
-            similarity.pq_codes_col(F.col("v"), cents).alias("codes"),
-            F.sqrt(similarity._dot(F.col("v"), F.col("v"))).alias("vnorm"),
-        )
+        return similarity.pq_encode(pv, cents)
 
     pq_seed_key = f"pq_stream_seed_{SCALE}x_v1"
     catalog.cached_table(spark, pq_seed_key, build_pq_seed)  # untimed ingest

@@ -296,13 +296,18 @@ def _events_prep(spark, n, d):
     if not _missing(path):
         return
     i = F.col("id")
+    users = max(n // 64, 1)
     ts = F.timestamp_micros(F.lit(1704067200000000) + i * 1357 + (i % 97) * 1000003)
     kinds = F.array(F.lit("click"), F.lit("view"), F.lit("error"))
+    # a user's events are i = user_id + k * users, so when 3 divides the
+    # user count i % 3 alone gives each user ONE type; shifting by k there
+    # cycles every user through all three (other counts keep i % 3)
+    kind = i % 3 if users % 3 else (i + F.expr(f"id div {users}")) % 3
     spark.range(n).select(
         i.alias("event_id"),
         ts.cast("timestamp_ntz").alias("ts"),
-        (i % max(n // 64, 1)).alias("user_id"),
-        F.element_at(kinds, (i % 3 + 1).cast("int")).alias("event_type"),
+        (i % users).alias("user_id"),
+        F.element_at(kinds, (kind + 1).cast("int")).alias("event_type"),
         F.round((i % 1000) / 10.0, 2).alias("value"),
         F.lit("{}").alias("props"),
     ).repartition(128).write.mode("overwrite").parquet(path)

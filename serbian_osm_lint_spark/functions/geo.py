@@ -27,26 +27,12 @@ TILE_ZOOM = 12
 
 
 # ----------------------------------------------------------------- python
-def haversine_km_py(lat1, lon1, lat2, lon2):
-    rlat1, rlon1, rlat2, rlon2 = map(math.radians, (lat1, lon1, lat2, lon2))
-    d = (
-        math.sin((rlat2 - rlat1) * 0.5) ** 2
-        + math.cos(rlat1) * math.cos(rlat2) * math.sin((rlon2 - rlon1) * 0.5) ** 2
-    )
-    return 2.0 * EARTH_RADIUS_KM * math.asin(math.sqrt(d))
-
-
 def tile_xy_py(lat, lon, zoom):
     n = 1 << zoom
     x = int(math.floor((lon + 180.0) / 360.0 * n))
     lat_r = math.radians(lat)
     y = int(math.floor((1.0 - math.log(math.tan(lat_r) + 1.0 / math.cos(lat_r)) / math.pi) / 2.0 * n))
     return x, y
-
-
-def cell_id_py(lat, lon, zoom=CELL_ZOOM):
-    x, y = tile_xy_py(lat, lon, zoom)
-    return (x << zoom) | y
 
 
 # ------------------------------------------------------------------ spark

@@ -327,19 +327,12 @@ def banded_sig_col(sig):
     )
 
 
-def verified_pairs_from_banded(banded, threshold: float, banded_b=None):
-    """Band-bucket equi-join + inline exact hashed-shingle Jaccard over
-    ``(doc_id, shingles_h, band_key)`` frames. Shared by the recompute
-    face (:func:`lsh_verified_pairs_from`), the stored-table face
-    (:func:`lsh_pairs_from_stored`) and the streaming face
-    (``streaming.stream.stream_near_dup_pairs``).
-
-    With ``banded_b=None`` this is the self-join over one frame. With a
-    second frame it is the two-sided form (a-side = ``banded``, b-side =
-    ``banded_b``); the ``doc_id_a < doc_id_b`` filter is unchanged, so a
-    stream whose b-side is each arriving micro-batch and whose a-side is
-    the full frozen table emits every pair exactly once — when the pair's
-    LARGER id arrives (the smaller is always in the static side)."""
+def verified_pairs_from_banded(banded, threshold: float):
+    """Band-bucket self-equi-join + inline exact hashed-shingle Jaccard
+    over one ``(doc_id, shingles_h, band_key)`` frame — the one-pass
+    pairing of the recompute face (:func:`lsh_verified_pairs_from`). The
+    stored-table and streaming faces pair through
+    :func:`verified_pairs_skinny_fetch` instead."""
     from pyspark.sql import functions as F
 
     left = banded.select(
@@ -354,13 +347,9 @@ def verified_pairs_from_banded(banded, threshold: float, banded_b=None):
     # join stays shuffle-hash even when one side would fit the broadcast
     # threshold — acceptable here because a shuffle-hash over a tiny side
     # is already cheap, and the hint's win at scale is what matters.
-    right = (
-        (banded_b if banded_b is not None else banded)
-        .select(
-            "band_key", F.col("doc_id").alias("doc_id_b"), F.col("shingles_h").alias("sh_b")
-        )
-        .hint("SHUFFLE_HASH")
-    )
+    right = banded.select(
+        "band_key", F.col("doc_id").alias("doc_id_b"), F.col("shingles_h").alias("sh_b")
+    ).hint("SHUFFLE_HASH")
     jac = F.round(
         F.size(F.array_intersect("sh_a", "sh_b"))
         / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
@@ -446,8 +435,7 @@ def minhash_sig_key(sf_dir: str) -> str:
     on-disk path (e.g. the 100×-proxy stream seed)."""
     from ..sources import catalog
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    return f"minhash_sigs_{key}_{catalog.SYNTH_VERSION}_{SIG_VERSION}_{CORPUS_TAG}"
+    return f"minhash_sigs_{catalog.source_key(sf_dir, 'documents')}_{SIG_VERSION}_{CORPUS_TAG}"
 
 
 def minhash_sig_table(spark, sf_dir: str):
@@ -610,13 +598,6 @@ def minhash_lsh_pairs_stored_df(spark, sf_dir: str):
     identical output, different topology (scan of the materialized
     signature table instead of recomputing signatures from text)."""
     return lsh_pairs_from_stored(spark, sf_dir, JACCARD_THRESHOLD)
-
-
-def sql_minhash_lsh_pairs_stored() -> str:
-    """Twin of :func:`minhash_lsh_pairs_stored_df`: storage topology is
-    invisible to semantics, so the oracle is the same verified-pair SQL —
-    the gate proves the stored table reproduces the recompute face."""
-    return _sql_lsh_verified_pairs(JACCARD_THRESHOLD)
 
 
 def ngram_jaccard_pairs_df(spark, sf_dir: str):
@@ -844,10 +825,10 @@ def simhash_sig_table(spark, sf_dir: str):
     bytes/doc. Mirrors :func:`minhash_sig_table`."""
     from ..sources import catalog
 
-    key = os.path.basename(os.path.normpath(sf_dir))
+    key = catalog.source_key(sf_dir, "documents")
     return catalog.cached_table(
         spark,
-        f"simhash_sigs_{key}_{catalog.SYNTH_VERSION}_{SIMHASH_SIG_VERSION}_{CORPUS_TAG}",
+        f"simhash_sigs_{key}_{SIMHASH_SIG_VERSION}_{CORPUS_TAG}",
         lambda: simhash_df(spark, sf_dir),
     )
 
@@ -859,10 +840,6 @@ def simhash_near_dups_stored_df(spark, sf_dir: str):
     skinny-fetch split is needed — the band join itself is the right
     plan over the stored scan."""
     return simhash_near_dup_pairs_from(simhash_sig_table(spark, sf_dir))
-
-
-def sql_simhash_near_dups_stored() -> str:
-    return sql_simhash_near_dups()
 
 
 def sql_simhash_near_dups() -> str:
@@ -1049,7 +1026,7 @@ def emb_bucket_table(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..sources import catalog
-    from .similarity import N_PLANE_SETS, emb_fingerprint
+    from .similarity import N_PLANE_SETS
 
     path = f"{sf_dir}/embeddings.parquet"
     n_raw = catalog.parquet_row_count(path)
@@ -1070,7 +1047,7 @@ def emb_bucket_table(spark, sf_dir: str):
     tbl = catalog.cached_table(
         spark,
         f"emb_buckets_{key}_{EMB_BUCKET_VERSION}_{EMB_DUP_TAG}"
-        f"_p{n_planes}s{N_PLANE_SETS}_{emb_fingerprint(path)}",
+        f"_p{n_planes}s{N_PLANE_SETS}_{catalog.fingerprint(path)}",
         build,
     )
     return tbl, n_planes
@@ -1121,12 +1098,6 @@ def embedding_near_dups_stored_df(spark, sf_dir: str):
         .select("vec_id_a", "vec_id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= COSINE_DUP_THRESHOLD)
     )
-
-
-def sql_embedding_near_dups_stored() -> str:
-    """Twin of :func:`embedding_near_dups_stored_df`: storage topology is
-    semantics-invisible — the same band-OR SQL as the recompute face."""
-    return sql_embedding_near_dups()
 
 
 def sql_embedding_near_dups() -> str:
@@ -1347,7 +1318,3 @@ def dedup_components_multi_stored_df(spark, sf_dir: str):
         "doc_id_a", "doc_id_b"
     )
     return components_from(mh.unionByName(sh))
-
-
-def sql_dedup_components_multi_stored() -> str:
-    return sql_dedup_components_multi()

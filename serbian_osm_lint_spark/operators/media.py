@@ -158,62 +158,82 @@ def media_payloads_df(spark, docs):
     ).withColumn("payload", F.encode(F.col("media_ref"), "utf-8"))
 
 
-#: quarantine-mode schema: dims are nullable and a decode_error column
-#: carries the per-row failure, so one corrupt payload cannot kill a
-#: 1000-executor job (route ``decode_error IS NOT NULL`` to a side table).
-MEDIA_FEATURES_QUARANTINE_SCHEMA = MEDIA_FEATURES_SCHEMA + ", decode_error string"
+def _map_payloads(payloads, schema: str, probe, on_error: str = "raise", fixed=None):
+    """The one batch loop behind the three media extractors: ``mapInPandas``
+    over a ``(doc_id, media_ref, payload)`` frame, one Arrow batch at a
+    time — the per-payload loop runs inside the batch function (the
+    real-decode analogue), never at the Spark row boundary.
 
-
-def media_features_from(payloads, on_error: str = "raise"):
-    """mapInPandas feature extraction over a ``(doc_id, media_ref,
-    payload)`` frame: real decode for recognized formats (PNG/JPEG/GIF
-    header parse), decode-stub otherwise, + md5-derived feature vector
-    per media span. Arrow-batched; the per-payload loop runs inside the
-    batch function (the real-decode analogue), never at the Spark row
-    boundary.
+    ``probe(payload) -> list[dict]`` decodes one payload into its output
+    rows (one dict per row; the frame sampler emits several).
+    ``fixed(pdf) -> dict`` optionally returns the decode-independent
+    columns, computed column-wise over the whole batch and repeated onto
+    each of the payload's rows.
 
     ``on_error``: ``"raise"`` (default — exact oracle-parity schema)
-    fails the task on a corrupt payload; ``"quarantine"`` emits the row
-    with NULL dims and the error message in ``decode_error`` instead —
-    the 100 TB posture, where a single bad blob must cost one row, not
-    the job."""
+    fails the task on a corrupt payload; ``"quarantine"`` appends a
+    ``decode_error`` column and turns a ``ValueError`` /
+    ``NotImplementedError`` into ONE row whose decoded fields are NULL
+    (the fixed columns survive) — the 100 TB posture, where a single bad
+    blob must cost one row, not the job (route ``decode_error IS NOT
+    NULL`` to a side table)."""
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
     quarantine = on_error == "quarantine"
+    if quarantine:
+        schema += ", decode_error string"
+    names = [field.split()[0] for field in schema.split(", ")]
 
-    def extract(batches):
+    def run(batches):
         for pdf in batches:
-            n = len(pdf)
-            widths = np.empty(n, dtype=object if quarantine else np.int32)
-            heights = np.empty(n, dtype=object if quarantine else np.int32)
-            errors = np.full(n, None, dtype=object)
-            feats = np.empty((n, FEATURE_DIM), dtype=np.float64)
+            src, rows = [], []  # batch row of each output row, its decoded fields
             for i, payload in enumerate(pdf["payload"]):
-                payload = bytes(payload)
-                digest = hashlib.md5(payload).digest()
                 try:
-                    widths[i], heights[i] = _decode_dims(payload, digest)
+                    out = probe(bytes(payload))
                 except (ValueError, NotImplementedError) as exc:
                     if not quarantine:
                         raise
-                    widths[i] = heights[i] = None
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-                feats[i] = np.frombuffer(digest[:FEATURE_DIM], dtype=np.uint8) / 255.0
-            out = {
-                "doc_id": pdf["doc_id"],
-                "media_ref": pdf["media_ref"],
-                "byte_len": pdf["payload"].map(len).astype("int32"),
-                "width": widths,
-                "height": heights,
-            }
-            for j in range(FEATURE_DIM):
-                out[f"feature_{j}"] = np.round(feats[:, j], 6)
-            if quarantine:
-                out["decode_error"] = errors
-            yield pd.DataFrame(out)
+                    out = [{"decode_error": f"{type(exc).__name__}: {exc}"}]
+                src.extend([i] * len(out))
+                rows.extend(out)
+            cols = {"doc_id": pdf["doc_id"], "media_ref": pdf["media_ref"]}
+            if fixed:
+                cols.update(fixed(pdf))
+            # missing fields reach Arrow as None (object columns), never NaN
+            yield pd.DataFrame({
+                c: np.asarray(cols[c])[src] if c in cols
+                else pd.Series([r.get(c) for r in rows], dtype=object)
+                for c in names
+            })
 
-    schema = MEDIA_FEATURES_QUARANTINE_SCHEMA if quarantine else MEDIA_FEATURES_SCHEMA
-    return payloads.mapInPandas(extract, schema)
+    return payloads.mapInPandas(run, schema)
+
+
+def _byte_len(pdf):
+    return pdf["payload"].map(len).astype("int32")
+
+
+def _image_fixed(pdf):
+    """byte_len + the md5-derived feature vector, column-wise per batch."""
+    digests = b"".join(hashlib.md5(p).digest()[:FEATURE_DIM] for p in pdf["payload"])
+    feats = np.round(np.frombuffer(digests, np.uint8).reshape(-1, FEATURE_DIM) / 255.0, 6)
+    return {"byte_len": _byte_len(pdf), **{f"feature_{j}": feats[:, j] for j in range(FEATURE_DIM)}}
+
+
+def _image_probe(payload: bytes):
+    width, height = _decode_dims(payload, hashlib.md5(payload).digest())
+    return [{"width": width, "height": height}]
+
+
+def media_features_from(payloads, on_error: str = "raise"):
+    """Feature extraction over a ``(doc_id, media_ref, payload)`` frame:
+    real decode for recognized formats (PNG/JPEG/GIF header parse),
+    decode-stub otherwise, + md5-derived feature vector per media span.
+    A quarantined row keeps ``byte_len`` and the features, with NULL
+    dims (see :func:`_map_payloads` for the batch shape and ``on_error``)."""
+    return _map_payloads(
+        payloads, MEDIA_FEATURES_SCHEMA, _image_probe, on_error, fixed=_image_fixed
+    )
 
 
 def _payloads_with_fixtures(spark, docs):
@@ -226,7 +246,7 @@ def _payloads_with_fixtures(spark, docs):
     return media_payloads_df(spark, docs).unionByName(fixture_payloads_df(spark))
 
 
-def extract_media_features_df(spark, docs, batch_hint: int = 1024):
+def extract_media_features_df(spark, docs):
     """Media features over the doc table's media spans plus the real-format
     fixtures (see :func:`media_features_from` for the batch shape)."""
     return media_features_from(_payloads_with_fixtures(spark, docs))
@@ -317,65 +337,29 @@ def try_real_audio_probe(payload: bytes):
     return rate, channels, bits, data_size // (channels * (bits // 8))
 
 
-AUDIO_PROBE_QUARANTINE_SCHEMA = AUDIO_PROBE_SCHEMA + ", decode_error string"
+def _audio_probe(payload: bytes):
+    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
+        rate, channels, bits, n_samples = try_real_audio_probe(payload)
+    else:
+        rate, channels, bits, n_samples = _audio_probe_stub(hashlib.md5(payload).digest())
+    return [{
+        "sample_rate": rate, "channels": channels, "bits_per_sample": bits,
+        "n_samples": n_samples, "duration_us": n_samples * 1_000_000 // rate,
+    }]
 
 
 def audio_probe_from(payloads, on_error: str = "raise"):
-    """mapInPandas audio probe over ``(doc_id, media_ref, payload)``:
-    REAL RIFF/WAVE header walk for WAV payloads, deterministic md5 stub
-    otherwise (the synthetic corpus payloads are utf-8 refs, so the
-    oracle-gated rows stay on the stub path). ``duration_us`` is exact
-    integer microseconds — no float column, so the DuckDB twin replays
-    it with pure integer arithmetic.
-
-    ``on_error='quarantine'`` mirrors :func:`media_features_from`: a
-    corrupt WAV costs one NULL-field row with ``decode_error`` set, not
-    the job."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
-    quarantine = on_error == "quarantine"
-
-    def probe(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "doc_id": pdf["doc_id"],
-                "media_ref": pdf["media_ref"],
-                "byte_len": pdf["payload"].map(len).astype("int32"),
-            }
-            dt = object if quarantine else np.int32
-            rates = np.empty(n, dtype=dt)
-            chans = np.empty(n, dtype=dt)
-            bits = np.empty(n, dtype=dt)
-            samples = np.empty(n, dtype=object if quarantine else np.int64)
-            durs = np.empty(n, dtype=object if quarantine else np.int64)
-            errors = np.full(n, None, dtype=object)
-            for i, payload in enumerate(pdf["payload"]):
-                payload = bytes(payload)
-                try:
-                    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-                        rates[i], chans[i], bits[i], samples[i] = try_real_audio_probe(
-                            payload
-                        )
-                    else:
-                        digest = hashlib.md5(payload).digest()
-                        rates[i], chans[i], bits[i], samples[i] = _audio_probe_stub(digest)
-                    durs[i] = int(samples[i]) * 1_000_000 // int(rates[i])
-                except (ValueError, NotImplementedError) as exc:
-                    if not quarantine:
-                        raise
-                    rates[i] = chans[i] = bits[i] = samples[i] = durs[i] = None
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-            out.update(
-                sample_rate=rates, channels=chans, bits_per_sample=bits,
-                n_samples=samples, duration_us=durs,
-            )
-            if quarantine:
-                out["decode_error"] = errors
-            yield pd.DataFrame(out)
-
-    schema = AUDIO_PROBE_QUARANTINE_SCHEMA if quarantine else AUDIO_PROBE_SCHEMA
-    return payloads.mapInPandas(probe, schema)
+    """Audio probe over ``(doc_id, media_ref, payload)``: REAL RIFF/WAVE
+    header walk for WAV payloads, deterministic md5 stub otherwise (the
+    synthetic corpus payloads are utf-8 refs, so the oracle-gated rows
+    stay on the stub path). ``duration_us`` is exact integer
+    microseconds — no float column, so the DuckDB twin replays it with
+    pure integer arithmetic. A quarantined row keeps ``byte_len`` (see
+    :func:`_map_payloads`)."""
+    return _map_payloads(
+        payloads, AUDIO_PROBE_SCHEMA, _audio_probe, on_error,
+        fixed=lambda pdf: {"byte_len": _byte_len(pdf)},
+    )
 
 
 def probe_media_audio_df(spark, docs):
@@ -484,7 +468,28 @@ MEDIA_FRAMES_SCHEMA = (
     "doc_id string, media_ref string, n_frames int, frame_idx int, "
     "frame_md5 string, resized_w int, resized_h int"
 )
-MEDIA_FRAMES_QUARANTINE_SCHEMA = MEDIA_FRAMES_SCHEMA + ", decode_error string"
+
+
+def _frames_probe(payload: bytes):
+    digest = hashlib.md5(payload).digest()
+    if len(payload) >= 12 and payload[4:8] == b"ftyp":
+        # REAL container metadata: dims from tkhd, one sampled frame per
+        # second of mvhd duration (bounded)
+        _, _, dur_ms, w, h = try_real_video_probe(payload)
+        if w == 0 or h == 0:
+            w, h = _decode_image_stub(digest)
+        n_frames = max(1, min(64, int(dur_ms // 1000)))
+    else:
+        w, h = _decode_image_stub(digest)
+        n_frames = 8 + digest[2] % 8
+    return [
+        {
+            "n_frames": n_frames, "frame_idx": idx,
+            "frame_md5": hashlib.md5(payload + b":" + str(idx).encode()).hexdigest(),
+            "resized_w": min(w // 2, 64), "resized_h": min(h // 2, 64),
+        }
+        for idx in range(0, n_frames, FRAME_STRIDE)
+    ]
 
 
 def media_frames_from(payloads, on_error: str = "raise"):
@@ -495,75 +500,11 @@ def media_frames_from(payloads, on_error: str = "raise"):
     MP4/ISO-BMFF payloads drive the sampler from REAL container metadata
     (tkhd dims, one frame per second of mvhd duration); other payloads
     use the deterministic stub (frame count and frame digests derive
-    from the payload md5). The Spark-side shape is the real thing either
-    way: narrow projection → ``mapInPandas`` (Arrow batches,
-    per-partition, no shuffle), one output row per sampled frame.
-    Output: (doc_id, media_ref, n_frames, frame_idx, frame_md5,
-    resized_w, resized_h).
-
-    ``on_error='quarantine'`` completes the three-extractor symmetry
-    (features/audio/frames): a corrupt container emits ONE row with NULL
-    frame fields and the error in ``decode_error`` instead of failing
-    the task — composable with
-    :func:`write_media_features_quarantined`."""
-    import pandas as pd
-
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
-    quarantine = on_error == "quarantine"
-
-    def sample(batches):
-        cols = (
-            "doc_id", "media_ref", "n_frames", "frame_idx",
-            "frame_md5", "resized_w", "resized_h",
-        )
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            if quarantine:
-                out["decode_error"] = []
-            for doc_id, ref, payload in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload)
-                digest = hashlib.md5(payload).digest()
-                try:
-                    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-                        # REAL container metadata: dims from tkhd, one sampled
-                        # frame per second of mvhd duration (bounded)
-                        _, _, dur_ms, w, h = try_real_video_probe(payload)
-                        if w == 0 or h == 0:
-                            w, h = _decode_image_stub(digest)
-                        n_frames = max(1, min(64, int(dur_ms // 1000)))
-                    else:
-                        w, h = _decode_image_stub(digest)
-                        n_frames = 8 + digest[2] % 8
-                except (ValueError, NotImplementedError) as exc:
-                    if not quarantine:
-                        raise
-                    out["doc_id"].append(doc_id)
-                    out["media_ref"].append(ref)
-                    for k in ("n_frames", "frame_idx", "resized_w", "resized_h",
-                              "frame_md5"):
-                        out[k].append(None)
-                    out["decode_error"].append(f"{type(exc).__name__}: {exc}")
-                    continue
-                for idx in range(0, n_frames, FRAME_STRIDE):
-                    out["doc_id"].append(doc_id)
-                    out["media_ref"].append(ref)
-                    out["n_frames"].append(n_frames)
-                    out["frame_idx"].append(idx)
-                    out["frame_md5"].append(
-                        hashlib.md5(payload + b":" + str(idx).encode()).hexdigest()
-                    )
-                    out["resized_w"].append(min(w // 2, 64))
-                    out["resized_h"].append(min(h // 2, 64))
-                    if quarantine:
-                        out["decode_error"].append(None)
-            int_cols = ("n_frames", "frame_idx", "resized_w", "resized_h")
-            yield pd.DataFrame(out).astype(
-                {c: ("Int32" if quarantine else "int32") for c in int_cols}
-            )
-
-    schema = MEDIA_FRAMES_QUARANTINE_SCHEMA if quarantine else MEDIA_FRAMES_SCHEMA
-    return payloads.mapInPandas(sample, schema)
+    from the payload md5). One output row per sampled frame: (doc_id,
+    media_ref, n_frames, frame_idx, frame_md5, resized_w, resized_h).
+    A quarantined container emits ONE row with NULL frame fields (see
+    :func:`_map_payloads`)."""
+    return _map_payloads(payloads, MEDIA_FRAMES_SCHEMA, _frames_probe, on_error)
 
 
 def sample_media_frames_df(spark, docs):

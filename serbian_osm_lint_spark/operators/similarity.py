@@ -152,14 +152,6 @@ def sign_bucket_col(v, n_planes: int = N_PLANES, plane_set: int = 0):
     return F.aggregate(terms, F.lit(0), lambda a, x: a + x)
 
 
-def sql_sign_bucket(v: str, n_planes: int = N_PLANES, plane_set: int = 0) -> str:
-    bit_terms = []
-    for i, plane in enumerate(_hyperplanes(n_planes, plane_set)):
-        arr = "[" + ", ".join(repr(w) for w in plane) + "]"
-        bit_terms.append(f"(CASE WHEN {_sql_dot(v, arr)} > 0 THEN {1 << i} ELSE 0 END)")
-    return "(" + " + ".join(bit_terms) + ")"
-
-
 #: plane-term budget for the DYNAMIC SQL twins: covers corpora up to
 #: TARGET_BUCKET_SIZE * 2^16 = 2M vectors, far past any driver scale.
 MAX_ORACLE_PLANES = 16
@@ -314,25 +306,6 @@ N_CENTROIDS = 16
 N_PROBE = 4
 
 
-def _centroid(c: int) -> list[float]:
-    """Deterministic pseudo-centroid c: LCG weights at plane offset 1000.
-    Retained as the corpus-free fallback codebook (tests, empty strata
-    are an error — see :func:`data_centroids`)."""
-    return [_lcg_weight(1000 + c, d) for d in range(EMB_DIM)]
-
-
-_LCG_CODEBOOK: list | None = None
-
-
-def _lcg_codebook() -> list[list[float]]:
-    """The fallback codebook as a STABLE object (so the _cb_lit literal
-    memo keys on one identity instead of a fresh list per call)."""
-    global _LCG_CODEBOOK
-    if _LCG_CODEBOOK is None:
-        _LCG_CODEBOOK = [_centroid(c) for c in range(N_CENTROIDS)]
-    return _LCG_CODEBOOK
-
-
 #: driver-side codebook memo, keyed by (embeddings path, footer row
 #: count, file fingerprint): the codebook is derived deterministically
 #: from the corpus, so re-deriving it per query only repeats the same
@@ -342,28 +315,6 @@ def _lcg_codebook() -> list[list[float]]:
 #: of the row count, so a rewritten table with the same row count but
 #: different vectors can't serve a stale codebook (ADVICE r6).
 _CODEBOOK_CACHE: dict = {}
-
-
-def emb_fingerprint(path: str) -> str:
-    """Cheap content fingerprint of a parquet file/dir: md5 over each
-    part file's (relative path, size, mtime_ns) — stat calls only, no
-    data read. At scale this is the Iceberg snapshot id."""
-    import hashlib
-    import os
-
-    h = hashlib.md5()
-    if os.path.isdir(path):
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    st = os.stat(os.path.join(root, f))
-                    rel = os.path.relpath(os.path.join(root, f), path)
-                    h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}".encode())
-    else:
-        st = os.stat(path)
-        h.update(f"{st.st_size}|{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:12]
 
 
 def data_centroids(spark, sf_dir: str) -> list[list[float]]:
@@ -385,10 +336,10 @@ def data_centroids(spark, sf_dir: str) -> list[list[float]]:
 
     from pyspark.sql import functions as F
 
-    from ..sources.catalog import parquet_row_count
+    from ..sources.catalog import fingerprint, parquet_row_count
 
     path = f"{sf_dir}/embeddings.parquet"
-    cache_key = (os.path.normpath(path), parquet_row_count(path), emb_fingerprint(path))
+    cache_key = (os.path.normpath(path), parquet_row_count(path), fingerprint(path))
     if cache_key in _CODEBOOK_CACHE:
         return _CODEBOOK_CACHE[cache_key]
 
@@ -423,9 +374,9 @@ def _norms_of(centroids: list[list[float]]) -> list[float]:
     return [math.sqrt(sum(w * w for w in c)) for c in centroids]
 
 
-def centroid_scores_col(v, centroids: list[list[float]] | None = None):
+def centroid_scores_col(v, centroids: list[list[float]]):
     """Array of N_CENTROIDS rounded normalized-dot scores for a vector
-    against ``centroids`` (default: the LCG fallback codebook).
+    against the ``centroids`` codebook (:func:`data_centroids`).
 
     Built as zip_with over the memoized nested-array codebook literal —
     same values as the unrolled 16-dot form (identical left-to-right
@@ -435,7 +386,6 @@ def centroid_scores_col(v, centroids: list[list[float]] | None = None):
     measured r7)."""
     from pyspark.sql import functions as F
 
-    centroids = _lcg_codebook() if centroids is None else centroids
     cb = _cb_lit(centroids)
     norms = F.lit(_norms_of(centroids))
     return F.zip_with(cb, norms, lambda c, nm: F.round(_dot(v, c) / nm, 6))
@@ -550,7 +500,7 @@ def ivf_assignment_table(spark, sf_dir: str):
     key = os.path.basename(os.path.normpath(sf_dir))
     return catalog.cached_table(
         spark,
-        f"ivf_assign_{key}_{IVF_VERSION}_{emb_fingerprint(path)}",
+        f"ivf_assign_{key}_{IVF_VERSION}_{catalog.fingerprint(path)}",
         build,
         partition_by=["cell"],
     )
@@ -596,13 +546,6 @@ def ann_ivf_topk_stored_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N
     ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
-def sql_ann_ivf_topk_stored() -> str:
-    """Twin of :func:`ann_ivf_topk_stored_df`: storage topology is
-    invisible to semantics — the same IVF SQL, proving the stored
-    assignment reproduces the recompute face."""
-    return sql_ann_ivf_topk()
-
-
 # -------------------------------------------------------------------- sql
 _SQL_EMB = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
 
@@ -631,17 +574,6 @@ def sql_ann_cosine_topk(k: int = TOPK, n_queries: int = N_QUERIES) -> str:
       FROM scored
     ) WHERE rank <= {k}
     """
-
-
-def sql_centroid_scores(v: str) -> str:
-    """LCG fallback-codebook scores (kept for the corpus-free tests)."""
-    cents = [_centroid(c) for c in range(N_CENTROIDS)]
-    norms = _norms_of(cents)
-    scores = ", ".join(
-        f"round({_sql_dot(v, '[' + ', '.join(repr(w) for w in cents[c]) + ']')} / {norms[c]!r}, 6)"
-        for c in range(N_CENTROIDS)
-    )
-    return f"[{scores}]"
 
 
 def sql_ann_ivf_topk(k: int = TOPK, n_queries: int = N_QUERIES) -> str:
@@ -824,18 +756,23 @@ def pq_codes_col(v, cents: list[list[float]]):
     return F.array(*codes)
 
 
-def _pq_encoded(spark, sf_dir: str):
-    """(vec_id, v, codes, vnorm) with codes computed inline (recompute face)."""
+def pq_encode(vecs, cents: list[list[float]]):
+    """The PQ store row ``(vec_id, v, codes, vnorm)`` over a ``(vec_id,
+    v)`` frame — the one encoding behind the code table, the recompute
+    face and the streaming code store."""
     from pyspark.sql import functions as F
 
-    cents = data_centroids(spark, sf_dir)
-    emb = _emb_spread(spark, sf_dir)
-    return emb.select(
+    return vecs.select(
         "vec_id",
         "v",
         pq_codes_col(F.col("v"), cents).alias("codes"),
         F.sqrt(_dot(F.col("v"), F.col("v"))).alias("vnorm"),
     )
+
+
+def _pq_encoded(spark, sf_dir: str):
+    """The corpus PQ-encoded inline (recompute face)."""
+    return pq_encode(_emb_spread(spark, sf_dir), data_centroids(spark, sf_dir))
 
 
 def pq_code_table(spark, sf_dir: str):
@@ -857,7 +794,7 @@ def pq_code_table(spark, sf_dir: str):
         return _pq_encoded(spark, sf_dir).drop("v")
 
     return catalog.cached_table(
-        spark, f"pq_codes_{key}_{PQ_VERSION}_{emb_fingerprint(path)}", build
+        spark, f"pq_codes_{key}_{PQ_VERSION}_{catalog.fingerprint(path)}", build
     )
 
 

@@ -325,13 +325,7 @@ def stream_ann_pq_incremental(
         arrivals = batch_df.select(
             "vec_id", similarity._to_double(F.col("embedding")).alias("v")
         )
-        enc = arrivals.select(
-            "vec_id",
-            "v",
-            similarity.pq_codes_col(F.col("v"), cents).alias("codes"),
-            F.sqrt(similarity._dot(F.col("v"), F.col("v"))).alias("vnorm"),
-        )
-        write_batch_idempotent(enc, store_dir, batch_id)
+        write_batch_idempotent(similarity.pq_encode(arrivals, cents), store_dir, batch_id)
         # table-so-far INCLUDES this batch (read back after the append)
         store = sess.read.parquet(store_dir).select(*store_cols)
         queries = sess.read.parquet(

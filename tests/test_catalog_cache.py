@@ -84,3 +84,46 @@ def test_waiter_times_out_on_orphaned_lock(spark, cache_root):
             lambda: spark.range(1),
             wait_timeout_s=0.3,
         )
+
+
+def test_same_named_data_dirs_get_their_own_stored_tables(spark, cache_root, tmp_path):
+    """Stored-table keys carry the content fingerprint of the table's input
+    file, not only the data directory's basename: a second ``sf0.001``
+    holding half the customers and documents must get its own doc, dims
+    and signature tables instead of the first directory's."""
+    import shutil
+
+    import pyarrow.parquet as pq
+    from conftest import SF_SMALL
+
+    from serbian_osm_lint_spark import synth
+    from serbian_osm_lint_spark.operators import dedup
+    from serbian_osm_lint_spark.sources import catalog
+
+    full, half = (str(tmp_path / side / os.path.basename(SF_SMALL)) for side in "ab")
+    os.makedirs(full)
+    os.makedirs(half)
+    for name in ("customer", "documents"):
+        src = f"{SF_SMALL}/{name}.parquet"
+        shutil.copy(src, full)
+        tab = pq.read_table(src)
+        pq.write_table(tab.slice(0, tab.num_rows // 2), f"{half}/{name}.parquet")
+
+    n_full = catalog.docs_table(spark, full).count()
+    n_half = catalog.docs_table(spark, half).count()
+    assert (n_full, n_half) == (synth.docs_df(spark, full).count(), synth.docs_df(spark, half).count())
+    assert n_half < n_full
+
+    catalog.dims_tables(spark, full)
+    wiki, wd = catalog.dims_tables(spark, half)
+    assert (wiki.count(), wd.count()) == (
+        synth.wiki_pages_df(spark, half).count(),
+        synth.wikidata_items_df(spark, half).count(),
+    )
+
+    assert dedup.minhash_sig_key(full) != dedup.minhash_sig_key(half)
+    dedup.simhash_sig_table(spark, full)
+    assert (
+        dedup.simhash_sig_table(spark, half).count()
+        == dedup.with_near_dups_df(spark, half).count()
+    )
