@@ -4,7 +4,8 @@
 Synthesizes ONCE a corpus directory shaped exactly like the driver's
 sf0.1 testdata but 100× the rows (1.5 M lint docs via ``customer``,
 500 k ``documents``, 200 k 64-dim ``embeddings``, 10 M ``events``),
-then runs the bench query set over it at local[32] with the same
+then runs the ``QUERIES`` entries of ``__spark_entry__.queries()`` over
+it on local[N] (N from ``session.default_cpus()``) with the same
 warm + median-of-3 + consuming-aggregate protocol as ``bench.py``.
 
 Purpose: the 15 k-row sf0.1 corpora amortize driver-side costs
@@ -34,12 +35,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402  (consume/calibrate + protocol constants)
 
-# one 32-thread JVM sorting 1.5 M-doc windows: size the heap like 32
-# executor cores would be. The sf0.1 default (8g) was a marginal fit at
-# 100× — r7's added ingest builds (simhash + IVF tables) in the same JVM
-# pushed the kNN window sort into Java-heap OOM, killing the context.
-os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
-
 SCALE = 100
 N_CUSTOMERS = 15_000 * SCALE
 N_DOCUMENTS = 5_000 * SCALE
@@ -47,8 +42,29 @@ N_EMBEDDINGS = 2_000 * SCALE
 N_EVENTS = 100_000 * SCALE
 N_USERS = 1_500 * SCALE
 EMB_DIM = 64
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_RUNS = 3
+#: the timed ``__spark_entry__.queries()`` entries, in run order
+QUERIES = (
+    "lint_verdicts",
+    "point_in_serbia",
+    "knn_dup_names_capped",
+    "tile_assignment",
+    "cell_counts_salted",
+    "minhash_lsh_pairs",
+    "minhash_lsh_pairs_stored",
+    "ann_cosine_topk",
+    "ann_ivf_topk",
+    "ann_ivf_topk_stored",
+    "ann_pq_topk_stored",
+    "simhash_near_dups",
+    "simhash_near_dups_stored",
+    "dedup_components_multi_stored",
+    "media_features",
+    "asof_join",
+    "range_join",
+    "decontaminate",
+    "vocab_topk",
+)
 
 
 def proxy_dir() -> str:
@@ -57,7 +73,7 @@ def proxy_dir() -> str:
     return os.path.join(_cache_root(), "sf10_proxy")
 
 
-def build_proxy(spark, out: str) -> None:
+def build_proxy(spark, out: str, cpus: int) -> None:
     """Write the four 100×-sized tables with the driver-testdata schemas.
     All derivations are deterministic column math (no RNG, no collect)."""
     from pyspark.sql import functions as F
@@ -65,7 +81,7 @@ def build_proxy(spark, out: str) -> None:
     from serbian_osm_lint_spark import synth
 
     os.makedirs(out, exist_ok=True)
-    parts = CPUS * 4
+    parts = cpus * 4
 
     # customer: only c_custkey is consumed (synth.scalar_tags_df) but the
     # full driver schema is written so every query sees the real shape
@@ -132,67 +148,44 @@ def build_proxy(spark, out: str) -> None:
 
 
 def main():
-    from serbian_osm_lint_spark.session import get_spark
-    from serbian_osm_lint_spark.operators import (
-        corpus,
-        dedup,
-        events,
-        media,
-        similarity,
-        spatial,
-    )
-    from serbian_osm_lint_spark.plans import lint_pipeline
+    # one 32-thread JVM sorting 1.5 M-doc windows: size the heap like 32
+    # executor cores would be. The sf0.1 default (8g) was a marginal fit at
+    # 100× — r7's added ingest builds (simhash + IVF tables) in the same JVM
+    # pushed the kNN window sort into Java-heap OOM, killing the context.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+
+    from __spark_entry__ import queries
+    from serbian_osm_lint_spark.session import default_cpus, get_spark
+    from serbian_osm_lint_spark.operators import dedup, similarity
     from serbian_osm_lint_spark.sources import catalog
 
-    spark = get_spark("bench100x", cpus=CPUS)
+    cpus = default_cpus()
+    spark = get_spark("bench100x", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     out = proxy_dir()
     if "--rebuild" in sys.argv or not os.path.exists(os.path.join(out, "_PROXY_READY")):
         t0 = time.perf_counter()
-        build_proxy(spark, out)
+        build_proxy(spark, out, cpus)
         print(f"# built 100x proxy in {time.perf_counter() - t0:.1f}s", file=sys.stderr)
 
-    docs = catalog.docs_table(spark, out)  # untimed materialization/scan warm
-    n_docs = docs.count()
+    n_docs = catalog.docs_table(spark, out).count()  # untimed materialization/scan warm
     dedup.minhash_sig_table(spark, out)  # untimed, like bench.py
     dedup.simhash_sig_table(spark, out)  # untimed ingest write (r7)
     similarity.ivf_assignment_table(spark, out)  # untimed ingest write (r7)
     similarity.pq_code_table(spark, out)  # untimed ingest encode (r7)
 
-    benches = {
-        "lint_verdicts": lambda: lint_pipeline.build_verdicts(spark, out),
-        "point_in_serbia": lambda: spatial.point_in_serbia_df(spark, docs),
-        "knn_dup_names_capped": lambda: spatial.knn_dup_names_capped_df(spark, docs),
-        "tile_assignment": lambda: spatial.tile_assignment_df(spark, docs),
-        "cell_counts_salted": lambda: spatial.cell_counts_salted_df(spark, docs),
-        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs_df(spark, out),
-        "minhash_pairs_stored": lambda: dedup.minhash_lsh_pairs_stored_df(spark, out),
-        "ann_cosine_topk": lambda: similarity.ann_cosine_topk_df(spark, out),
-        "ann_ivf_topk": lambda: similarity.ann_ivf_topk_df(spark, out),
-        "ann_ivf_topk_stored": lambda: similarity.ann_ivf_topk_stored_df(spark, out),
-        "ann_pq_topk_stored": lambda: similarity.ann_pq_topk_stored_df(spark, out),
-        "simhash_near_dups": lambda: dedup.simhash_near_dups_df(spark, out),
-        "simhash_stored": lambda: dedup.simhash_near_dups_stored_df(spark, out),
-        "dedup_components_multi_stored": lambda: dedup.dedup_components_multi_stored_df(
-            spark, out
-        ),
-        "media_features": lambda: media.extract_media_features_df(spark, docs),
-        "asof_join": lambda: events.asof_join_df(spark, out),
-        "range_join": lambda: events.range_join_df(spark, out),
-        "decontaminate": lambda: corpus.decontaminate_df(spark, out),
-        "vocab_topk": lambda: corpus.vocab_topk_df(spark, out),
-    }
-
+    registry = queries()
     bench.calibrate(spark)
     calib_before = bench.calibrate(spark)
     timings, samples = {}, {}
-    for name, fn in benches.items():
-        bench.consume(fn())
+    for name in QUERIES:
+        fn = registry[name]
+        bench.consume(fn(spark, out))
         runs = []
         for _ in range(N_RUNS):
             t0 = time.perf_counter()
-            bench.consume(fn())
+            bench.consume(fn(spark, out))
             runs.append(round(time.perf_counter() - t0, 3))
         timings[name] = round(statistics.median(runs), 3)
         samples[name] = runs
@@ -326,7 +319,7 @@ def main():
                 "loadavg": [round(x, 2) for x in os.getloadavg()],
                 "sf": out,
                 "scale_vs_sf0.1": SCALE,
-                "cpus": CPUS,
+                "cpus": cpus,
                 "n_docs": n_docs,
                 "docs_per_sec": round(n_docs / lint_tile, 1) if lint_tile else None,
             }

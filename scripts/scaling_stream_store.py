@@ -2,9 +2,11 @@
 per-micro-batch pair-pass cost as the signature STORE grows, shuffle path
 vs broadcast-arrivals path.
 
-Builds stores of 1x / 4x / 8x the sf1.0 signature table (id-offset copies
-— band keys all distinct across copies, so candidate counts stay linear),
-then times verified_pairs_skinny_fetch with a fixed 500-doc arrival batch:
+Builds stores of 1x / 4x / 8x the signature table of
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1; id-offset copies — band keys all
+distinct across copies, so candidate counts stay linear), then times
+verified_pairs_skinny_fetch with a fixed 500-doc arrival batch on
+``session.default_cpus()`` cores:
 
   * broadcast_b=False (old): the store's exploded band keys are SHUFFLED
     every batch — per-batch cost grows with the store;
@@ -26,12 +28,11 @@ from pyspark.sql import functions as F  # noqa: E402
 from serbian_osm_lint_spark.session import get_spark  # noqa: E402
 from serbian_osm_lint_spark.operators import dedup  # noqa: E402
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main():
-    spark = get_spark("scaling_stream_store", cpus=CPUS)
+    spark = get_spark("scaling_stream_store")
     spark.sparkContext.setLogLevel("ERROR")
     base = dedup.minhash_sig_table(spark, SF)
     n = base.count()

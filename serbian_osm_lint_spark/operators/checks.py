@@ -42,7 +42,7 @@ from ..functions.translit import (
     sql_has_cyrillic,
 )
 from ..functions.geo import haversine_km_col, sql_haversine_km
-from .spans import with_flat_entity
+from .spans import FLAT_KEYS, with_flat_entity
 
 #: (overall map, source) pairs the default run evaluates — the analogue of
 #: the reference config's map×check-suite expansion (``src/main.py:172-182``).
@@ -119,21 +119,11 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
         haversine_km_col(F.col("lat"), F.col("lon"), F.col("w_lat"), F.col("w_lon")),
     )
 
-    _flat_t = {
-        "place": "a_place", "name": "a_name", "name:sr": "a_name_sr",
-        "name:sr-Latn": "a_latn", "is_in:country": "a_isin",
-        "wikipedia": "a_wp", "wikidata": "a_wd",
-    }
-    _flat_h = {
-        "name": "h_name", "name:sr": "h_name_sr", "name:sr-Latn": "h_latn",
-        "is_in:country": "h_isin", "wikipedia": "h_wp", "wikidata": "h_wd",
-    }
-
     def t(key):
-        return F.col(_flat_t[key])
+        return F.col(FLAT_KEYS[key][0])
 
     def has(key):
-        return F.col(_flat_h[key])
+        return F.col(FLAT_KEYS[key][1])
 
     def nonempty(key):
         return F.coalesce(t(key), F.lit("")) != ""

@@ -25,10 +25,6 @@ ordering is engine-independent.
 from __future__ import annotations
 
 EMB_DIM = 64
-#: fallback plane count for callers that don't derive one from the corpus
-#: size (``dedup.n_planes_for`` is the sizing rule; 4 planes is what it
-#: yields for the 500-vector driver tables).
-N_PLANES = 4
 TOPK = 5
 N_QUERIES = 20  # vec_id < N_QUERIES form the query set
 
@@ -51,7 +47,7 @@ def _lcg_weight(plane: int, dim: int) -> float:
     return ((x % 2001) - 1000) / 1000.0
 
 
-def _hyperplanes(n_planes: int = N_PLANES, plane_set: int = 0) -> list[list[float]]:
+def _hyperplanes(n_planes: int, plane_set: int = 0) -> list[list[float]]:
     base = plane_set * PLANE_SET_STRIDE
     return [[_lcg_weight(base + p, d) for d in range(EMB_DIM)] for p in range(n_planes)]
 
@@ -136,7 +132,7 @@ def _planes_lit(n_planes: int, plane_set: int):
     return _PLANES_LIT_CACHE[key]
 
 
-def sign_bucket_col(v, n_planes: int = N_PLANES, plane_set: int = 0):
+def sign_bucket_col(v, n_planes: int, plane_set: int = 0):
     """Random-hyperplane sign bucket of a double-array column: bit p is
     set iff dot(v, plane_p) > 0. Deterministic (LCG planes, no RNG);
     ``plane_set`` selects one of the independent band-OR plane sets.

@@ -16,9 +16,8 @@ import os
 
 import pandas as pd
 
+from ..operators.events import SESSION_GAP_SEC
 from .stream import _run_available_now, write_batch_idempotent
-
-SESSION_GAP_SEC = 1800
 
 OUTPUT_SCHEMA = "user_id long, n_sessions long, n_events long"
 STATE_SCHEMA = "last_epoch long, n_sessions long, n_events long"

@@ -108,3 +108,20 @@ def test_every_query_has_an_oracle_twin():
     q = entry.queries()
     o = entry.oracle_sql()
     assert set(q) == set(o)
+
+
+def test_bench_100x_selects_registry_queries():
+    """The 100×-proxy harness names its queries, each name resolves, and
+    importing it leaves the environment (e.g. the driver heap) alone."""
+    import importlib.util
+    import os
+
+    import __spark_entry__ as entry
+
+    path = os.path.join(os.path.dirname(entry.__file__), "scripts", "bench_100x.py")
+    spec = importlib.util.spec_from_file_location("bench_100x", path)
+    mod = importlib.util.module_from_spec(spec)
+    env = dict(os.environ)
+    spec.loader.exec_module(mod)
+    assert dict(os.environ) == env
+    assert mod.QUERIES and set(mod.QUERIES) <= set(entry.queries())

@@ -37,7 +37,7 @@ def test_workload_prep_and_timed_pass(spark, tmp_path, name, n):
     w.prep(spark, n, d)
     # procs workloads time one executor's shard of the corpus files
     shard = scaling._files(d)[::2] if w.procs else None
-    sec, row = scaling.measure(w, spark, d, shard)
+    sec, _cpu, row = scaling.measure(w, spark, d, shard)
     assert sec > 0
     count = next(iter(row.values()))  # every checksum row leads with its count
     if name in EMPTY_AT_TINY:
@@ -58,3 +58,5 @@ def test_two_level_run_reproduces_its_checksum(tmp_path):
     assert res["lo"]["checksum"] == res["hi"]["checksum"]
     assert res["lo"]["checksum"]["n"] > 0
     assert res["efficiency"] > 0
+    assert res["lo"]["cpu_s"] > 0 and res["hi"]["cpu_s"] > 0
+    assert res["cpu_efficiency"] > 0
