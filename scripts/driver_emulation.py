@@ -4,7 +4,7 @@ Fresh-process consumption of the module surface: smoke entry(spark), then
 run the queries() entries side-by-side with their oracle_sql() on DuckDB
 and compare row-count + schema + order-insensitive value hash. Naming
 queries runs only those — the fast inner loop while optimizing a single
-operator. The core count comes from SPARK_GRAFT_CPUS.
+operator. Cores come from SPARK_GRAFT_CPUS; tests import ``norm``/``vhash``.
 
 Usage: python scripts/driver_emulation.py [--sf DIR] [query ...]
 """
@@ -22,32 +22,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ap = argparse.ArgumentParser()
 ap.add_argument("--sf", default="/root/testdata/sf0.01", help="data directory")
 ap.add_argument("queries", nargs="*", help="queries() names (default: all)")
-args = ap.parse_args()
-SF = args.sf
-
-spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
-)
-mod = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(mod)
-
-from serbian_osm_lint_spark.session import get_spark  # noqa: E402
-
-spark = get_spark("driver-emulation")
-spark.sparkContext.setLogLevel("ERROR")
-
-# t1 smoke
-edf = mod.entry(spark)
-rows = edf.collect()
-print(f"entry: rows={len(rows)} schema={[f.name for f in edf.schema.fields]}")
-assert len(rows) > 0
-
-con = duckdb.connect()
-for name in "region nation customer supplier part orders lineitem events documents embeddings".split():
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{SF}/{name}.parquet'")
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
+    """Columns by name, floats to 6 decimals, values as strings, rows sorted."""
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if str(df[c].dtype).startswith("float"):
@@ -60,21 +38,49 @@ def vhash(df: pd.DataFrame) -> str:
     return hashlib.md5(df.to_csv(index=False).encode()).hexdigest()
 
 
-queries, oracles = mod.queries(), mod.oracle_sql()
-names = args.queries or sorted(queries)
-ok = True
-for name in names:
-    sdf = norm(queries[name](spark, SF).toPandas())
-    if name not in oracles:
-        print(f"{name}: rows={len(sdf)} oracle=none", flush=True)
-        continue
-    odf = norm(con.execute(oracles[name]).df())
-    schema_match = list(sdf.columns) == list(odf.columns)
-    match = schema_match and len(sdf) == len(odf) and vhash(sdf) == vhash(odf)
-    ok = ok and match
-    print(
-        f"{name}: rows={len(sdf)}/{len(odf)} schema_match={schema_match} value_match={match}",
-        flush=True,
+def main():
+    args = ap.parse_args()
+
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
     )
-print("ALL MATCH" if ok else "MISMATCH", f"({len(names)} queries, sf={SF})")
-sys.exit(0 if ok else 1)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    from serbian_osm_lint_spark.session import get_spark
+
+    spark = get_spark("driver-emulation")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # t1 smoke
+    edf = mod.entry(spark)
+    rows = edf.collect()
+    print(f"entry: rows={len(rows)} schema={[f.name for f in edf.schema.fields]}")
+    assert len(rows) > 0
+
+    con = duckdb.connect()
+    for name in "region nation customer supplier part orders lineitem events documents embeddings".split():
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{args.sf}/{name}.parquet'")
+
+    queries, oracles = mod.queries(), mod.oracle_sql()
+    names = args.queries or sorted(queries)
+    ok = True
+    for name in names:
+        sdf = norm(queries[name](spark, args.sf).toPandas())
+        if name not in oracles:
+            print(f"{name}: rows={len(sdf)} oracle=none", flush=True)
+            continue
+        odf = norm(con.execute(oracles[name]).df())
+        schema_match = list(sdf.columns) == list(odf.columns)
+        match = schema_match and len(sdf) == len(odf) and vhash(sdf) == vhash(odf)
+        ok = ok and match
+        print(
+            f"{name}: rows={len(sdf)}/{len(odf)} schema_match={schema_match} value_match={match}",
+            flush=True,
+        )
+    print("ALL MATCH" if ok else "MISMATCH", f"({len(names)} queries, sf={args.sf})")
+    sys.exit(0 if ok else 1)
+
+
+if __name__ == "__main__":
+    main()

@@ -3,7 +3,9 @@
 Each named query (default: all) gets an untimed warm-up call, then a
 profiled call into a ``noop`` sink. The metric window opens before the
 query function is called, not at the action: ``simhash_near_dups`` runs
-its pandas-UDF job in a lazy ``localCheckpoint`` while its plan is built.
+its signature job in a lazy ``localCheckpoint`` while its plan is built.
+Python-worker nodes are the ``ArrowEvalPython``/``BatchEvalPython`` UDF
+nodes and the media faces' ``MapInPandas``.
 Writes ``PROFILE_<sf basename>.json`` (the ``rec`` keys below) and each
 query's executed plans, ``<query>.txt``, under ``--out``.
 
@@ -28,7 +30,7 @@ def python_nodes(sql, executions):
     for e in executions:
         values = sql.executionMetrics(e.executionId())
         found = [n for n in _seq(sql.planGraph(e.executionId()).allNodes())
-                 if n.name() in ("ArrowEvalPython", "BatchEvalPython")]
+                 if n.name() in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")]
         nodes, execs = nodes + len(found), execs + bool(found)
         for m in (m for n in found for m in _seq(n.metrics())):
             if m.name() == "number of output rows" and values.contains(m.accumulatorId()):

@@ -9,12 +9,12 @@ formula, so cross-engine equality is exact (floats rounded to 6).
 
 from __future__ import annotations
 
-#: ASCII-whitespace tokenizer class — the ONE split spec both engines (and
-#: the simhash pandas UDF) use. Java regex, RE2 and Python ``re`` all read
-#: these escapes identically; ``\s``/``str.split()`` would not (Java adds
-#: \x0B, RE2 lacks it, Python splits on all of Unicode). Defined HERE and
-#: re-exported by :mod:`..operators.dedup` so every word split in the repo
-#: shares it (ADVICE r4: the `\s+` splits below diverged on vertical tab).
+#: ASCII-whitespace tokenizer class — the ONE split spec both engines use.
+#: Java regex, RE2 and Python ``re`` all read these escapes identically;
+#: ``\s``/``str.split()`` would not (Java adds \x0B, RE2 lacks it, Python
+#: splits on all of Unicode). Defined HERE and re-exported by
+#: :mod:`..operators.dedup` so every word split in the repo shares it
+#: (ADVICE r4: the `\s+` splits below diverged on vertical tab).
 WS_SPLIT_RE = r"[ \t\n\r\f\x0B]+"
 
 #: characters of :data:`WS_SPLIT_RE` for embedding in negated classes —

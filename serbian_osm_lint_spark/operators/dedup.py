@@ -10,8 +10,8 @@ Scale shapes:
     exchange is built once and reused for both sides — scan-once), and
     exact Jaccard is verified inline from the carried shingles. Band
     buckets are ~uniform by construction; AQE skew-join covers hot bands.
-  * SimHash — 64-bit signature via a vectorized pandas UDF (unique words
-    hashed once per Arrow batch); near-dup lookup = hamming ≤ r probing
+  * SimHash — 64-bit signature as one per-row native fold (per-bit
+    majority over md5 word hashes); near-dup lookup = hamming ≤ r probing
     ALL four 16-bit bands (banded equi-join, never all-pairs). With
     r = 3 < 4 bands, the pigeonhole principle guarantees any qualifying
     pair agrees on at least one full band — recall is EXACT, at a fixed
@@ -34,7 +34,7 @@ Scale shapes:
 
 Tokenizer spec (shared cross-engine contract): words/shingles split on
 the explicit ASCII-whitespace class :data:`WS_SPLIT_RE` in BOTH engines
-(Java regex, RE2, and the Python UDF interpret it identically) — never
+(Java regex and RE2 interpret it identically) — never
 ``\\s``/``str.split()``, whose whitespace classes differ per engine.
 
 The driver corpus has no natural duplicates, so the dedup queries run
@@ -48,9 +48,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
-
 N_HASHES = 8
 N_BANDS = 4  # rows per band = N_HASHES // N_BANDS = 2
 JACCARD_THRESHOLD = 0.5
@@ -60,9 +57,9 @@ N_SIMHASH_BANDS = 64 // SIMHASH_BAND_BITS  # 4 bands; r < bands ⇒ exact recall
 SIMHASH_HAMMING_R = 3
 COSINE_DUP_THRESHOLD = 0.9
 
-#: ASCII-whitespace tokenizer class — the ONE split spec both engines (and
-#: the simhash pandas UDF) use. Java regex, RE2 and Python ``re`` all read
-#: these escapes identically; ``\s``/``str.split()`` would not (Java adds
+#: ASCII-whitespace tokenizer class — the ONE split spec both engines use.
+#: Java regex, RE2 and Python ``re`` all read these escapes identically;
+#: ``\s``/``str.split()`` would not (Java adds
 #: \x0B, RE2 lacks it, Python splits on all of Unicode). Canonically
 #: defined in :mod:`..functions.text` (ADVICE r4) and re-exported here.
 from ..functions.text import WS_SPLIT_RE  # noqa: E402
@@ -614,57 +611,36 @@ def sql_ngram_jaccard_pairs() -> str:
 
 
 # --------------------------------------------------------------- simhash
-def simhash_df(spark, sf_dir: str):
-    """64-bit SimHash per doc via a vectorized pandas UDF (Arrow batches).
+def simhash_sig_from(texts):
+    """(doc_id, simhash) from any (doc_id, text) frame, as per-row native
+    expressions like :func:`_shingled_sig_from`.
 
     Spec (replayed bit-exactly by :func:`sql_simhash`): per doc, the
-    DISTINCT words (split on the shared ASCII-whitespace class
-    :data:`WS_SPLIT_RE` — the cross-engine tokenizer contract) each hash
-    to the first 8 bytes of ``md5(word)`` (big-endian uint64); bit b of
-    the signature is set iff strictly more than half the distinct words
-    have bit b set. Wordless docs hash to 0. Stored as the int64
-    reinterpretation.
+    DISTINCT :data:`WS_SPLIT_RE` words each hash to the first 8 bytes of
+    ``md5(word)``, read as a big-endian int64; bit b of the signature is
+    set iff strictly more than half the distinct words have bit b set.
+    Wordless docs hash to 0.
 
-    Vectorization: unique words are hashed ONCE per Arrow batch (shared
-    vocabulary), bit expansion is one numpy broadcast over the vocab, and
-    each doc reduces to an index-gather + column sum.
+    The vote is ONE SQL fold over the 64 bit positions, each counting its
+    bit over the word hashes ``h`` (at sf0.1 on 4 cores, 64 per-bit
+    columns took ~0.42 s to build and ~1.1 s of jobs, against ~0.33 s and
+    ~0.8 s). ``h`` must stay referenced twice in it (``aggregate`` and
+    ``size``): Catalyst inlines a projection referenced once, which would
+    re-run the md5s per bit (the edge-case test checks the optimized plan).
     """
     from pyspark.sql import functions as F
 
-    @F.pandas_udf("long")
-    def simhash(text: pd.Series) -> pd.Series:
-        import hashlib
-        import re
+    words = F.array_distinct(F.filter(words_col(F.col("text")), lambda w: w != ""))
+    h = texts.select("doc_id", F.transform(
+        words, lambda w: F.conv(F.substring(F.md5(w), 1, 16), 16, -10).cast("long")).alias("h"))
+    ones = "aggregate(h, 0, (a, x) -> a + CAST((x >> b) & 1 AS INT))"
+    return h.selectExpr("doc_id", "aggregate(sequence(0, 63), 0L, (s, b) -> "
+                        f"s | IF(2 * {ones} > size(h), shiftleft(1L, b), 0L)) AS simhash")
 
-        ws = re.compile(WS_SPLIT_RE)
-        vocab_index: dict[str, int] = {}
-        doc_word_idx = []
-        for t in text:
-            words = set(ws.split(t)) - {""}
-            idxs = [vocab_index.setdefault(w, len(vocab_index)) for w in words]
-            doc_word_idx.append(np.asarray(idxs, dtype=np.int64))
-        if vocab_index:
-            hv = np.empty(len(vocab_index), dtype=np.uint64)
-            for w, i in vocab_index.items():
-                hv[i] = int.from_bytes(hashlib.md5(w.encode()).digest()[:8], "big")
-            bit_positions = np.arange(64, dtype=np.uint64)
-            bits = ((hv[:, None] >> bit_positions[None, :]) & np.uint64(1)).astype(np.int64)
-            weights = (np.uint64(1) << bit_positions)
-        out = np.zeros(len(text), dtype=np.int64)
-        for i, idxs in enumerate(doc_word_idx):
-            n = len(idxs)
-            if n == 0:
-                continue
-            ones = bits[idxs].sum(axis=0)
-            sig = ((2 * ones > n).astype(np.uint64) * weights).sum(dtype=np.uint64)
-            out[i] = sig.astype(np.int64)
-        return pd.Series(out)
 
-    docs = with_near_dups_df(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        simhash(F.col("text")).alias("simhash"),
-    )
+def simhash_df(spark, sf_dir: str):
+    """SimHash per doc of the planted-dup corpus (:func:`simhash_sig_from`)."""
+    return simhash_sig_from(with_near_dups_df(spark, sf_dir))
 
 
 def sql_simhash() -> str:
@@ -735,7 +711,7 @@ def simhash_near_dup_pairs_from(sig):
     # exchange itself moves ~16 B/doc.
     # One aggregation pass, shared by all five consumers: collect_list is
     # non-deterministic, which BLOCKS exchange reuse — without the plan
-    # cut the scan+agg subtree (and the pandas-UDF pass above it on the
+    # cut the scan+agg subtree (and the signature pass above it on the
     # recompute face) re-executes once per consumer (measured: 3 × 27-task
     # jobs at sf0.1). The frame is 16 B + ids per distinct sig, so the
     # lazy localCheckpoint is ~free and per-plan (nothing crosses runs).
@@ -808,8 +784,8 @@ def simhash_near_dup_pairs_from(sig):
 def simhash_near_dups_df(spark, sf_dir: str):
     """SimHash near-dup pairs (doc_id_a, doc_id_b, hamming) with exact
     recall at hamming ≤ r — see :func:`simhash_near_dup_pairs_from`
-    (whose grouped-signature checkpoint also makes the pandas-UDF
-    signature pass execute exactly once per query)."""
+    (whose grouped-signature checkpoint also makes the signature pass
+    execute exactly once per query)."""
     return simhash_near_dup_pairs_from(simhash_df(spark, sf_dir))
 
 
@@ -819,9 +795,8 @@ SIMHASH_SIG_VERSION = "v1"
 
 def simhash_sig_table(spark, sf_dir: str):
     """The STORED SimHash table ``(doc_id, simhash)`` — the 100 TB shape
-    the recompute face's docstring promises: the pandas-UDF signature
-    pass (the dominant cost — it executes once per side under the AQE
-    broadcast self-join) runs once at ingest; every pair pass scans 16
+    the recompute face's docstring promises: the signature pass (md5
+    of every distinct word) runs once at ingest; every pair pass scans 16
     bytes/doc. Mirrors :func:`minhash_sig_table`."""
     from ..sources import catalog
 
@@ -835,7 +810,7 @@ def simhash_sig_table(spark, sf_dir: str):
 
 def simhash_near_dups_stored_df(spark, sf_dir: str):
     """Stored-table face of :func:`simhash_near_dups_df` — identical
-    output (same oracle SQL), zero Python-UDF work per pass. The rows
+    output (same oracle SQL), no text re-read per pass. The rows
     are already skinny (one int64), so unlike the MinHash path no
     skinny-fetch split is needed — the band join itself is the right
     plan over the stored scan."""

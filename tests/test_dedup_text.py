@@ -2,6 +2,9 @@
 """Training-data operators: dedup finds the planted duplicates, simhash is
 stable under small mutation, ANN-LSH recall vs brute force, media plumbing."""
 
+import hashlib
+import re
+
 import pytest
 
 from conftest import SF_ORACLE, SF_SMALL
@@ -99,6 +102,37 @@ def test_simhash_stability_under_mutation(spark):
     for doc_id, s in sig.items():
         if doc_id < 1000000 and doc_id % 7 == 0 and (doc_id + 1000000) in sig:
             assert s == sig[doc_id + 1000000]
+
+
+def _md5_u64(word: str) -> int:
+    return int.from_bytes(hashlib.md5(word.encode()).digest()[:8], "big")
+
+
+def _ref_simhash(text: str) -> int:
+    """The SimHash spec in plain Python (see dedup.simhash_sig_from)."""
+    from serbian_osm_lint_spark.functions.text import WS_SPLIT_RE
+
+    hs = [_md5_u64(w) for w in set(re.split(WS_SPLIT_RE, text)) - {""}]
+    sig = sum(1 << b for b in range(64) if 2 * sum(h >> b & 1 for h in hs) > len(hs))
+    return sig - (1 << 64) if sig >> 63 else sig
+
+
+def test_simhash_sig_matches_reference_on_edge_cases(spark):
+    from serbian_osm_lint_spark.operators import dedup
+
+    neg = next(w for w in (f"w{i}" for i in range(100)) if _md5_u64(w) >> 63)
+    texts = ["", " \t\n\r\f\x0b ", "alpha\x0bbeta\x0bgamma", "alpha beta gamma",
+             "alpha alpha beta beta beta", "alpha beta", neg]
+    sig = dedup.simhash_sig_from(spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string"))
+    # the word hashes are projected once, below the 64-bit fold, never inlined into it
+    hashed = [n for n in sig._jdf.queryExecution().optimizedPlan().toString().splitlines() if "md5(" in n]
+    assert len(hashed) == 1 and "aggregate(" not in hashed[0], hashed
+    got = [r.simhash for r in sig.orderBy("doc_id").collect()]
+    assert got == [_ref_simhash(t) for t in texts]
+    assert got[0] == got[1] == 0 and got[2] == got[3] != 0 and got[4] == got[5]
+    # two words: every bit they differ on is a 1-1 tie, which stays clear
+    assert got[5] % (1 << 64) == _md5_u64("alpha") & _md5_u64("beta") != _md5_u64("alpha")
+    assert got[6] < 0  # bit 63 set
 
 
 def test_ann_lsh_recall_vs_brute_force(spark):

@@ -1,52 +1,28 @@
 # -*- coding: utf-8 -*-
 """Differential oracle: every queries() entry vs its oracle_sql() twin on
-DuckDB at sf0.001 (the driver repeats this at sf0.01). Value-level frame
-equality after sorting by all columns."""
+DuckDB at sf0.001 (the driver repeats this at sf0.01). Both frames go
+through ``scripts/driver_emulation.py``'s ``norm`` and ``vhash``, so this
+suite and the replay script compare by one rule."""
 
-import importlib.util
-import os
-
-import pandas as pd
 import pytest
 
+import __spark_entry__ as entry_mod
 from conftest import SF_SMALL
-
-_spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
-)
-entry_mod = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(entry_mod)
+from scripts.driver_emulation import norm, vhash
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
-
-
-def _norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif str(df[c].dtype).startswith("float"):
-            df[c] = df[c].round(6)
-        elif str(df[c].dtype) in ("int32", "uint32", "int16"):
-            df[c] = df[c].astype("int64")
-        elif str(df[c].dtype) == "bool":
-            df[c] = df[c].astype(bool)
-        elif str(df[c].dtype).startswith("datetime64"):
-            # spark→ns vs duckdb→us: same instants, different pandas unit
-            df[c] = df[c].astype("datetime64[us]")
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_query_matches_oracle(spark, duck, name):
     if name not in ORACLES:
         pytest.skip(f"{name} has no SQL oracle (rows-only contract)")
-    sdf = _norm(QUERIES[name](spark, SF_SMALL).toPandas())
-    odf = _norm(duck.execute(ORACLES[name]).df())
+    sdf = norm(QUERIES[name](spark, SF_SMALL).toPandas())
+    odf = norm(duck.execute(ORACLES[name]).df())
     assert list(sdf.columns) == list(odf.columns), (sdf.columns, odf.columns)
     assert len(sdf) == len(odf), f"row count {len(sdf)} vs {len(odf)}"
-    pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
+    assert vhash(sdf) == vhash(odf), sdf.compare(odf).head()
 
 
 def test_entry_smoke(spark):

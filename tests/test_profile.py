@@ -1,7 +1,9 @@
 # -*- coding: utf-8 -*-
-"""The per-query profiler (scripts/profile.py): one run over three
-registry queries writes every key and plan, and places the SimHash
-recompute face's pandas-UDF work in the checkpoint built with its plan."""
+"""The per-query profiler (scripts/profile.py): one run over four
+registry queries writes every key and plan, opens its window before the
+query function is called (the SimHash recompute face's checkpoint runs
+while its plan is built), and counts the Python-worker nodes the media
+faces' ``mapInPandas`` runs."""
 
 import json
 import os
@@ -11,14 +13,15 @@ import sys
 from conftest import SF_SMALL
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-QUERIES = ["simhash_near_dups", "simhash_near_dups_stored", "lint_verdicts"]
+QUERIES = ["simhash_near_dups", "simhash_near_dups_stored", "lint_verdicts", "media_features"]
 KEYS = {"build_s", "phases_s", "action_s", "job_s", "shuffle_bytes", "spill_bytes",
         "input_bytes", "task_skew", "stage_tasks", "python_nodes", "python_execs",
         "python_rows"}
 
 
 def test_profile_records_every_query_and_python_stage(spark, tmp_path):
-    from serbian_osm_lint_spark.operators import dedup
+    from serbian_osm_lint_spark.operators import media
+    from serbian_osm_lint_spark.sources import catalog
 
     subprocess.run(
         [sys.executable, os.path.join(ROOT, "scripts", "profile.py"),
@@ -32,14 +35,14 @@ def test_profile_records_every_query_and_python_stage(spark, tmp_path):
         assert rec["stage_tasks"] and all(n > 0 for n in rec["stage_tasks"].values()), name
         assert (tmp_path / f"{name}.txt").stat().st_size > 0, name
 
-    # the UDF runs in exactly one execution, the lazy checkpoint the plan
-    # build triggers, once per doc; the consuming action runs none
-    recompute = prof["queries"]["simhash_near_dups"]
-    assert recompute["python_execs"] == 1 and recompute["python_nodes"] >= 1
-    assert recompute["python_rows"] == dedup.simhash_sig_table(spark, SF_SMALL).count()
-    checkpoint, action = (tmp_path / "simhash_near_dups.txt").read_text().split("== execution")[1:]
-    assert "localCheckpoint" in checkpoint.splitlines()[0] and "ArrowEvalPython" in checkpoint
-    assert "ArrowEvalPython" not in action
-    for name in ("simhash_near_dups_stored", "lint_verdicts"):
+    # the grouped-signature checkpoint executes inside the window, while
+    # the plan is built, ahead of the consuming action
+    checkpoint = (tmp_path / "simhash_near_dups.txt").read_text().split("== execution")[1]
+    assert "localCheckpoint" in checkpoint.splitlines()[0]
+    for name in ("simhash_near_dups", "simhash_near_dups_stored", "lint_verdicts"):
         rec = prof["queries"][name]
         assert rec["python_nodes"] == rec["python_execs"] == rec["python_rows"] == 0, name
+    media_rec = prof["queries"]["media_features"]  # mapInPandas: one row per payload fed
+    assert media_rec["python_nodes"] >= 1 and media_rec["python_execs"] >= 1
+    payloads = media._payloads_with_fixtures(spark, catalog.docs_table(spark, SF_SMALL))
+    assert media_rec["python_rows"] == payloads.count() > 0
