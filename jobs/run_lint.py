@@ -4,14 +4,15 @@
 Usage:
   scripts/package.sh   # builds dist/serbian_osm_lint_spark.zip
   spark-submit --driver-memory 8g --py-files dist/serbian_osm_lint_spark.zip jobs/run_lint.py \
-      --sf-dir /root/testdata/sf0.01 --out /tmp/lint_out [--resume] [--report]
+      --sf-dir /root/testdata/sf0.01 --out /tmp/lint_out [--report]
 
 ``--driver-memory`` is required: spark-submit launches the driver JVM
 before this script runs, so no heap set from inside the app — such as
 the default ``session.get_spark`` gives local runs — can apply to it.
 
-The job writes the long verdict table (bucket-partitioned, resumable via
-the manifest in <out>/_manifest) and prints run metrics (S9: the Spark
+The job writes the long verdict table (bucket-partitioned; re-running
+with the same ``--out`` resumes, skipping the buckets the manifest in
+<out>/_manifest marks done) and prints run metrics (S9: the Spark
 equivalent of the reference's every-100k progress counter —
 ``src/sources/osm_source.py:28-30`` — is the observe() row/error count
 plus per-bucket lineage rows).
@@ -27,9 +28,6 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", required=True)
-    # the stored doc table fixes its bucket domain at write time; passing a
-    # different count is rejected by run_resumable (silent skip = data loss)
-    ap.add_argument("--n-buckets", type=int, default=None)
     ap.add_argument("--report", action="store_true", help="print report aggregates")
     args = ap.parse_args()
 
@@ -48,9 +46,8 @@ def main():
         return lint_verdicts_df(s, docs_subset, wiki, wd)
 
     docs = catalog.docs_table(spark, args.sf_dir)
-    processed = resume.run_resumable(
-        spark, docs, process, args.out, n_buckets=args.n_buckets
-    )
+    # the stored doc table fixes the bucket domain (catalog.N_DOC_BUCKETS)
+    processed = resume.run_resumable(spark, docs, process, args.out)
     manifest = resume.BucketManifest(f"{args.out}/_manifest")
     lineage = manifest.done_buckets()
     verdicts = resume.read_result(spark, args.out)

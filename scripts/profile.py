@@ -6,8 +6,11 @@ query function is called, not at the action: ``simhash_near_dups`` runs
 its signature job in a lazy ``localCheckpoint`` while its plan is built.
 Python-worker nodes are the ``ArrowEvalPython``/``BatchEvalPython`` UDF
 nodes and the media faces' ``MapInPandas``.
-Writes ``PROFILE_<sf basename>.json`` (the ``rec`` keys below) and each
-query's executed plans, ``<query>.txt``, under ``--out``.
+Writes ``PROFILE_<sf basename>.json`` (the ``rec`` keys below), each
+query's executed plans, ``<query>.txt``, and its optimized logical plan,
+``<query>.optimized.txt``, under ``--out``. The latter has the ``#<id>``
+expression ids and the lambda-variable counters (``x_17``) stripped, so
+two commits' plans compare with plain ``diff``.
 
 Usage: python scripts/profile.py [--sf DIR] [--out DIR] [query ...]
 """
@@ -15,6 +18,7 @@ import argparse
 import importlib.util
 import json
 import os
+import re
 import sys
 import sysconfig
 import time
@@ -85,6 +89,9 @@ def main():
         with open(os.path.join(args.out, f"{name}.txt"), "w") as fh:
             fh.writelines(f"== execution {e.executionId()}: {e.description()}\n"
                           f"{e.physicalPlanDescription()}\n" for e in execs)
+        with open(os.path.join(args.out, f"{name}.optimized.txt"), "w") as fh:
+            plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+            fh.write(re.sub(r"#\d+|(?<=lambda [a-z])_\d+", "", plan))
         with open(out_json, "w") as fh:
             json.dump(profile, fh, indent=1)
         print(json.dumps({name: rec}), flush=True)

@@ -27,6 +27,11 @@ Python-object reprs):
 All other message templates are byte-identical to the cited ``format``
 strings.
 
+The verdict table, the proposed fixes (:mod:`.fixes`) and the guess walk
+(:mod:`.wikiwalk`) start from one lint-entity frame (:func:`lint_frame`)
+and read one set of check predicates (:func:`lint_checks`), so a fix
+gate is the very condition its check reports.
+
 Scale notes: the whole verdict computation is one projection + two
 broadcast joins + one explode — no shuffle until aggregation. At 10^12
 docs the plan is scan → codegen select → explode, embarrassingly
@@ -34,6 +39,8 @@ partition-parallel.
 """
 
 from __future__ import annotations
+
+from collections import namedtuple
 
 from ..functions.translit import (
     cyr2lat_col,
@@ -60,39 +67,67 @@ CHECK_MODULE = "checks"
 VALID_BOXES = "Насељено место у Србији,Град у Србији,Градска четврт"
 
 
-def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS):
-    """Long-format verdict table for all checks over all maps.
+#: one check over the lint-entity frame: ``err`` is the raw (nullable)
+#: error condition, a row errs where ``coalesce(err, false)``; ``gate`` is
+#: the reference's early ``return ''`` (the check is evaluated only under
+#: it), set where a fix reads what the check found (C8).
+Check = namedtuple("Check", "err message fixable gate", defaults=(None,))
 
-    ``docs`` is the interleaved document table; dims are small and
-    broadcast. Returns columns (doc_id, entity_type, display_name,
-    map_name, check_name, result, message, fixable) — entity_type and
-    display_name follow reference ``src/sources/osm_source.py:40-43``
-    (name or id, with ``' / ' + name:sr`` appended when present).
-    """
+
+def _t(key):
+    from pyspark.sql import functions as F
+
+    return F.col(FLAT_KEYS[key][0])
+
+
+def _has(key):
+    from pyspark.sql import functions as F
+
+    return F.col(FLAT_KEYS[key][1])
+
+
+def auth_name():
+    """The map's authoritative name: ``name`` on the Serbia map,
+    ``name:sr`` elsewhere (``src/checks.py:409-410``)."""
+    from pyspark.sql import functions as F
+
+    return F.when(F.col("is_serbia"), _t("name")).otherwise(_t("name:sr"))
+
+
+def with_wiki_page(df, wiki_pages):
+    """Broadcast left join of the page the ``wikipedia`` tag names
+    (``wp_title``; page titles are unique) — adds ``w_title`` and the page
+    columns."""
+    from pyspark.sql import functions as F
+
+    df = df.withColumn("wp_title", F.when(_has("wikipedia"), F.expr("substring(a_wp, 4)")))
+    return df.join(
+        F.broadcast(wiki_pages).withColumnRenamed("title", "w_title"),
+        df["wp_title"] == F.col("w_title"),
+        "left",
+    )
+
+
+def lint_frame(docs, maps=DEFAULT_MAPS, wiki_pages=None, wikidata_items=None):
+    """The lint-entity frame every lint operator starts from: one row per
+    (applicable entity, map) with :func:`with_flat_entity`'s columns plus
+    ``map_name`` and ``is_serbia``. Dims given here are joined once per
+    entity, before the map explode (broadcast left joins; wiki titles and
+    wikidata q-ids are unique)."""
     from pyspark.sql import functions as F
 
     # fast-path flat extraction of the well-known keys (see spans.py —
     # ~2x cheaper than map decode, and it keeps every projection small
     # enough for codegen).
-    base = with_flat_entity(docs)
-    base = base.filter(F.col("a_place").isin(*APPLICABLE_PLACES))
-
-    # dims: broadcast left joins (wiki titles / wikidata q-ids are unique).
-    base = base.withColumn(
-        "wp_title",
-        F.when(F.col("h_wp"), F.expr("substring(a_wp, 4)")),
-    )
-    base = base.join(
-        F.broadcast(wiki_pages).withColumnRenamed("title", "w_title"),
-        base["wp_title"] == F.col("w_title"),
-        "left",
-    )
-    base = base.join(
-        F.broadcast(wikidata_items).withColumnRenamed("q_id", "wd_q"),
-        F.col("a_wd") == F.col("wd_q"),
-        "left",
-    )
-
+    base = with_flat_entity(docs).filter(_t("place").isin(*APPLICABLE_PLACES))
+    if wiki_pages is not None:
+        base = with_wiki_page(base, wiki_pages)
+    if wikidata_items is not None:
+        base = base.join(
+            F.broadcast(wikidata_items).withColumnRenamed("q_id", "wd_q"),
+            _t("wikidata") == F.col("wd_q"),
+            "left",
+        )
     # map expansion as an exploded literal array instead of a crossJoin:
     # BroadcastNestedLoopJoin blocks whole-stage codegen; Generate doesn't.
     maps_structs = F.array(
@@ -101,29 +136,39 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
             for m, s in maps
         ]
     )
-    base = (
+    return (
         base.select("*", F.explode(maps_structs).alias("_m"))
         .select("*", F.col("_m.map_name").alias("map_name"), F.col("_m.is_serbia").alias("is_serbia"))
         .drop("_m")
     )
-    is_serbia = F.col("is_serbia")
 
-    # Keep shared expensive intermediates (transliteration chain, trig) in
-    # their own layer: the original single giant projection (13 structs x
-    # tag lookups x the 60-replace chain) fell out of whole-stage codegen
-    # and ran interpreted (~20x slower, measured). Layered small
-    # projections evaluate each shared expression once.
-    auth = F.when(is_serbia, F.col("a_name")).otherwise(F.col("a_name_sr"))
-    base = base.withColumn("auth_lat", cyr2lat_col(auth)).withColumn(
+
+def with_check_layer(df):
+    """``auth_lat`` (the transliterated authoritative name) and ``w_dist``
+    (entity ↔ linked page, km) in their own projection layer.
+
+    Keep shared expensive intermediates (transliteration chain, trig) in
+    their own layer: the original single giant projection (13 structs x
+    tag lookups x the 60-replace chain) fell out of whole-stage codegen
+    and ran interpreted (~20x slower, measured). Layered small
+    projections evaluate each shared expression once."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn("auth_lat", cyr2lat_col(auth_name())).withColumn(
         "w_dist",
         haversine_km_col(F.col("lat"), F.col("lon"), F.col("w_lat"), F.col("w_lon")),
     )
 
-    def t(key):
-        return F.col(FLAT_KEYS[key][0])
 
-    def has(key):
-        return F.col(FLAT_KEYS[key][1])
+def lint_checks() -> dict[str, Check]:
+    """Every check's error predicate, message and fixability over the
+    lint frame (wiki + wikidata joined) and :func:`with_check_layer`, keyed
+    by check name in verdict order. The fix gates of
+    :mod:`.fixes` and :mod:`.wikiwalk` are these predicates too."""
+    from pyspark.sql import functions as F
+
+    is_serbia = F.col("is_serbia")
+    t, has = _t, _has
 
     def nonempty(key):
         return F.coalesce(t(key), F.lit("")) != ""
@@ -133,10 +178,10 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
     excl = has("is_in:country") & (t("is_in:country") != "Serbia")
     latn = t("name:sr-Latn")
 
-    checks = []
+    checks = {}
 
-    def add(cls_name, err_cond, message, fixable):
-        checks.append((f"{CHECK_MODULE}.{cls_name}", err_cond, message, fixable))
+    def add(cls_name, err_cond, message, fixable, gate=None, module=CHECK_MODULE):
+        checks[f"{module}.{cls_name}"] = Check(err_cond, message, fixable, gate)
 
     # C1 — NameMissingCheck (src/checks.py:192-205)
     add(
@@ -148,7 +193,7 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
 
     # C2 — NameCyrillicCheck (src/checks.py:208-231)
     c2_eval = F.when(is_serbia, nonempty("name") & ~excl).otherwise(nonempty("name:sr"))
-    c2_name = F.when(is_serbia, t("name")).otherwise(t("name:sr"))
+    c2_name = auth_name()
     add(
         "NameCyrillicCheck",
         c2_eval & ~has_cyrillic_col(c2_name),
@@ -167,7 +212,7 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
     )
 
     # C4 — LatinNameSameAsCyrillicCheck (src/checks.py:299-356)
-    c4_cyr = F.when(is_serbia, t("name")).otherwise(t("name:sr"))
+    c4_cyr = auth_name()
     c4_eval = (
         F.when(is_serbia, has("name")).otherwise(has("name:sr"))
         & has("name:sr-Latn")
@@ -256,7 +301,7 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
             )
         )
     )
-    add("WikipediaEntryValidCheck", c8_err, c8_msg, False)
+    add("WikipediaEntryValidCheck", c8_err, c8_msg, False, gate=c8_gate)
 
     # C9 — WikidataEntryExistsCheck (src/checks.py:554-607)
     add(
@@ -308,14 +353,29 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
 
     # C14 — RemoveLatinName (src/checks_extended.py:11-26; message reuse
     # quirk of the reference kept verbatim).
-    checks.append(
-        (
-            "checks_extended.RemoveLatinName",
-            nonempty("name:sr-Latn"),
-            F.format_string("Latin name missing for %s %s", place_type, name_or_id),
-            True,
-        )
+    add(
+        "RemoveLatinName",
+        nonempty("name:sr-Latn"),
+        F.format_string("Latin name missing for %s %s", place_type, name_or_id),
+        True,
+        module="checks_extended",
     )
+    return checks
+
+
+def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS):
+    """Long-format verdict table for all checks over all maps.
+
+    ``docs`` is the interleaved document table; dims are small and
+    broadcast. Returns columns (doc_id, entity_type, display_name,
+    map_name, check_name, result, message, fixable) — entity_type and
+    display_name follow reference ``src/sources/osm_source.py:40-43``
+    (name or id, with ``' / ' + name:sr`` appended when present).
+    """
+    from pyspark.sql import functions as F
+
+    base = with_check_layer(lint_frame(docs, maps, wiki_pages, wikidata_items))
+    t, has = _t, _has
 
     verdicts = F.array(
         *[
@@ -329,7 +389,7 @@ def lint_verdicts_df(spark, docs, wiki_pages, wikidata_items, maps=DEFAULT_MAPS)
                 .otherwise(F.lit(False))
                 .alias("fixable"),
             )
-            for name, cond, msg, fixable in checks
+            for name, (cond, msg, fixable, _gate) in lint_checks().items()
         ]
     )
     # display name (reference src/sources/osm_source.py:40-43): name if the

@@ -8,7 +8,10 @@ one row per (entity, map, check) whose fix gates pass —
 ``(doc_id, map_name, check_name, action, tag, new_val)`` — which a thin
 driver loop (or ``foreachBatch`` exporter) could replay against the API.
 
-Fix gates replicated:
+The reference attaches each fix to its check class, so a fix fires where
+its check errs and its gates are other checks' verdicts. Here too: every
+condition below is a predicate of :func:`.checks.lint_checks`, evaluated
+over the same lint-entity frame (:func:`.checks.lint_frame`):
   * C3 add ``name:sr-Latn = cyr2lat(authoritative)`` — gates are
     C1-passes (authoritative name present) AND C2-passes
     (``src/checks.py:261-275``). NB: C2 *skips* (passes) excluded
@@ -21,65 +24,39 @@ Fix gates replicated:
   * C7 modify ``wikipedia = sr:<guess>`` when the existing entry is not
     Serbian — the same guess machinery (``src/checks.py:476-494``);
   * C9 add ``wikidata = <Q-id of the linked page>`` when C8 resolved the
-    page (valid box, coords, ≤ 20 km) and wikidata is missing
-    (``src/checks.py:588-607``) — the page→Q-id lookup is the broadcast
-    wiki dim's ``wikidata_q`` column;
+    page (its gate held and it passed: valid box, coords, ≤ 20 km) and
+    wikidata is missing (``src/checks.py:588-607``) — the page→Q-id
+    lookup is the broadcast wiki dim's ``wikidata_q`` column;
   * C12 add ``is_in:country = Serbia`` (``src/checks.py:681-698``);
   * C14 delete ``name:sr-Latn`` (``src/checks_extended.py:28-52``).
 
-The C6/C7 guess walk is map-aware like the reference: it walks the
-``name`` tag on the Serbia map and ``name:sr`` elsewhere
-(``src/checks.py:409-410,477-478``) — see :func:`..wikiwalk.wiki_guess_df`
-for the per-map gates.
+C6 and C7 share one guess walk (:func:`..wikiwalk.guess_walk`): their
+error sets are disjoint, so one walk over both yields each row's guess
+once, tagged by whether the ``wikipedia`` tag was present. The walk is
+map-aware like the reference: it walks ``name`` on the Serbia map and
+``name:sr`` elsewhere (``src/checks.py:409-410,477-478``).
 """
 
 from __future__ import annotations
 
-from ..functions.geo import haversine_km_col, sql_haversine_km
-from ..functions.translit import (
-    cyr2lat_col,
-    has_cyrillic_col,
-    sql_cyr2lat,
-    sql_has_cyrillic,
-)
-from .checks import APPLICABLE_PLACES, DEFAULT_MAPS
-from .spans import with_flat_entity
-from .wikiwalk import sql_wiki_guess, wiki_guess_df
+from ..functions.geo import sql_haversine_km
+from ..functions.translit import sql_cyr2lat, sql_has_cyrillic
+from .checks import DEFAULT_MAPS, lint_checks, lint_frame, with_check_layer, with_wiki_page
+from .wikiwalk import C6, C7, guess_walk, sql_wiki_guess, walk_entities
 
 
 def proposed_fixes_df(spark, docs, wiki_pages, maps=DEFAULT_MAPS):
     from pyspark.sql import functions as F
 
-    ent = with_flat_entity(docs)
-    _t = {"name": "a_name", "name:sr": "a_name_sr", "name:sr-Latn": "a_latn",
-          "is_in:country": "a_isin", "place": "a_place", "wikipedia": "a_wp",
-          "wikidata": "a_wd"}
-    _h = {"name": "h_name", "name:sr": "h_name_sr", "name:sr-Latn": "h_latn",
-          "is_in:country": "h_isin", "wikipedia": "h_wp", "wikidata": "h_wd"}
-    t = lambda key: F.col(_t[key])  # noqa: E731
-    has = lambda key: F.col(_h[key])  # noqa: E731
-    nonempty = lambda key: F.coalesce(t(key), F.lit("")) != ""  # noqa: E731
+    ent = lint_frame(docs, maps)
+    checks = lint_checks()
 
-    app = ent.filter(t("place").isin(*APPLICABLE_PLACES))
-    excl0 = F.coalesce(
-        has("is_in:country") & (t("is_in:country") != "Serbia"), F.lit(False)
-    )
-    # exploded literal map array (BNLJ crossJoin blocks whole-stage codegen)
-    maps_structs = F.array(
-        *[F.struct(F.lit(m).alias("map_name"), F.lit(s).alias("is_serbia")) for m, s in maps]
-    )
-    base = (
-        app.select("*", F.explode(maps_structs).alias("_m"))
-        .select("*", F.col("_m.map_name").alias("map_name"), F.col("_m.is_serbia").alias("is_serbia"))
-        .drop("_m")
-    )
-    is_serbia = F.col("is_serbia")
-    excl = excl0
-    auth = F.when(is_serbia, t("name")).otherwise(t("name:sr"))
+    def err(name):
+        return F.coalesce(checks[name].err, F.lit(False))
 
-    def fix_struct(check, cond, action, tag, new_val):
+    def fix(check, action, tag, new_val, gate=True):
         return F.when(
-            F.coalesce(cond, F.lit(False)),
+            err(check) & gate,
             F.struct(
                 F.lit(check).alias("check_name"),
                 F.lit(action).alias("action"),
@@ -88,109 +65,42 @@ def proposed_fixes_df(spark, docs, wiki_pages, maps=DEFAULT_MAPS):
             ),
         )
 
-    # C3: latn missing; gates: C1 passes (authoritative present) AND C2
-    # passes. C2's error condition is map-aware and skips excluded
-    # entities on the Serbia map (src/checks.py:216-231), so the fix gate
-    # here is NOT plain has_cyrillic(auth): exclusion lets it through.
-    c3_err = F.when(is_serbia, ~nonempty("name:sr-Latn")).otherwise(
-        ~nonempty("name:sr-Latn") & has("name:sr")
+    # C3: C2's error is map-aware and skips excluded entities on the
+    # Serbia map (src/checks.py:216-231), so the gate is NOT plain
+    # has_cyrillic(auth): exclusion lets it through. C1 gates on the
+    # Serbia map, where ``name`` is authoritative; elsewhere C3's own
+    # error already requires ``name:sr``.
+    c3_gate = ~err("checks.NameCyrillicCheck") & (
+        ~F.col("is_serbia") | ~err("checks.NameMissingCheck")
     )
-    auth_cyr = has_cyrillic_col(F.coalesce(auth, F.lit("")))
-    c2_eval = F.when(is_serbia, nonempty("name") & ~excl).otherwise(nonempty("name:sr"))
-    c2_ok = ~F.coalesce(c2_eval & ~auth_cyr, F.lit(False))
-    c3_gate = F.when(is_serbia, nonempty("name")).otherwise(has("name:sr")) & c2_ok
-    # C4: latn present but mistransliterated
-    c4_err = (
-        F.when(is_serbia, has("name")).otherwise(has("name:sr"))
-        & has("name:sr-Latn")
-        & ~excl
-        & (cyr2lat_col(auth) != t("name:sr-Latn"))
-    )
+    # C9 reads the page C8 cached: C8 evaluated (its gate) and passed.
+    c8 = checks["checks.WikipediaEntryValidCheck"]
+    c9_gate = c8.gate & ~c8.err
     fixes = F.array(
-        fix_struct("checks.LatinNameExistsCheck", c3_err & c3_gate, "add", "name:sr-Latn", cyr2lat_col(auth)),
-        fix_struct("checks.LatinNameSameAsCyrillicCheck", c4_err, "modify", "name:sr-Latn", cyr2lat_col(auth)),
-        fix_struct(
-            "checks.IsInCountryCheck",
-            ~has("is_in:country"),
-            "add",
-            "is_in:country",
-            F.lit("Serbia"),
-        ),
-        fix_struct(
-            "checks_extended.RemoveLatinName",
-            nonempty("name:sr-Latn"),
-            "delete",
-            "name:sr-Latn",
-            F.lit(None).cast("string"),
-        ),
+        fix("checks.LatinNameExistsCheck", "add", "name:sr-Latn", F.col("auth_lat"), c3_gate),
+        fix("checks.LatinNameSameAsCyrillicCheck", "modify", "name:sr-Latn", F.col("auth_lat")),
+        fix("checks.WikidataEntryExistsCheck", "add", "wikidata", F.col("wikidata_q"), c9_gate),
+        fix("checks.IsInCountryCheck", "add", "is_in:country", F.lit("Serbia")),
+        fix("checks_extended.RemoveLatinName", "delete", "name:sr-Latn", F.lit(None).cast("string")),
     )
     tag_fixes = (
-        base.select("doc_id", "map_name", F.explode(fixes).alias("f"))
+        with_check_layer(with_wiki_page(ent, wiki_pages))
+        .select("doc_id", "map_name", F.explode(fixes).alias("f"))
         .filter(F.col("f").isNotNull())
-        .select(
-            "doc_id",
-            "map_name",
-            F.col("f.check_name").alias("check_name"),
-            F.col("f.action").alias("action"),
-            F.col("f.tag").alias("tag"),
-            F.col("f.new_val").alias("new_val"),
-        )
+        .select("doc_id", "map_name", "f.*")
     )
-
-    def per_map(df):
-        return (
-            df.select("*", F.explode(maps_structs).alias("_m"))
-            .select("*", F.col("_m.map_name").alias("map_name"))
-            .drop("_m")
-        )
-
-    # C6/C7: wikipedia guesses — the walk is per-map (name on the Serbia
-    # map, name:sr elsewhere), so its rows already carry map_name
-    def guess_fixes(mode, check_name, action):
-        g = wiki_guess_df(spark, docs, wikipedia_mode=mode, maps=maps)
-        return g.select(
-            "doc_id",
-            "map_name",
-            F.lit(check_name).alias("check_name"),
-            F.lit(action).alias("action"),
-            F.lit("wikipedia").alias("tag"),
-            F.concat(F.lit("sr:"), F.col("guess_title")).alias("new_val"),
-        )
-
-    c6 = guess_fixes("missing", "checks.WikipediaEntryExistsCheck", "add")
-    c7 = guess_fixes("non_sr", "checks.WikipediaEntryIsInSerbianCheck", "modify")
-
-    # C9: wikidata from the C8-resolved page. The reference fix fires only
-    # when C8's do_check cached the page (name present, sr: entry, valid
-    # box + coords, ≤ 20 km) and the wikidata tag is absent.
-    wdim = F.broadcast(
-        wiki_pages.select(
-            F.col("title").alias("w_title"), "has_box", "w_lat", "w_lon", "wikidata_q"
-        )
-    )
-    dist = haversine_km_col(F.col("lat"), F.col("lon"), F.col("w_lat"), F.col("w_lon"))
-    c9 = (
-        app.filter(
-            has("name")
-            & has("wikipedia")
-            & t("wikipedia").startswith("sr:")
-            & ~excl0
-            & ~has("wikidata")
-        )
-        .withColumn("wp_title", F.expr("substring(a_wp, 4)"))
-        .join(wdim, F.col("wp_title") == F.col("w_title"))
-        .filter(F.col("has_box") & F.col("w_lat").isNotNull() & (dist <= 20.0))
-        .select("doc_id", "wikidata_q")
-    )
-    c9 = per_map(c9).select(
+    # C6/C7: one walk over both error sets; rows that have a wikipedia tag
+    # are C7's (it errs only where the tag is present, C6 only where absent)
+    has_wp = F.col("h_wp")
+    guess_fixes = guess_walk(spark, walk_entities(ent, checks, C6, C7)).select(
         "doc_id",
         "map_name",
-        F.lit("checks.WikidataEntryExistsCheck").alias("check_name"),
-        F.lit("add").alias("action"),
-        F.lit("wikidata").alias("tag"),
-        F.col("wikidata_q").alias("new_val"),
+        F.when(has_wp, F.lit(C7)).otherwise(F.lit(C6)).alias("check_name"),
+        F.when(has_wp, F.lit("modify")).otherwise(F.lit("add")).alias("action"),
+        F.lit("wikipedia").alias("tag"),
+        F.concat(F.lit("sr:"), F.col("guess_title")).alias("new_val"),
     )
-    return tag_fixes.unionByName(c6).unionByName(c7).unionByName(c9)
+    return tag_fixes.unionByName(guess_fixes)
 
 
 def sql_proposed_fixes(docs_sql: str, wiki_sql: str, maps=DEFAULT_MAPS) -> str:

@@ -21,16 +21,24 @@ The dim is a static literal (same constant list feeds the Spark frames
 and the SQL VALUES), with per-name shapes: direct-valid page, 2-link
 disambig whose first link has no coords (exception path), a 4-deep
 disambig chain (must fail the depth bound), and missing page.
+
+Which entities walk is not decided here: :func:`walk_entities` filters the
+shared lint-entity frame (:func:`.checks.lint_frame`) by the check
+predicates of :func:`.checks.lint_checks` — the fixed check errs, its fix
+gates (C1 and C2 pass) hold — so the gates are the conditions the verdict
+table reports.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from ..functions.geo import haversine_km_col, sql_haversine_km
-from ..functions.translit import has_cyrillic_col, sql_has_cyrillic
+from ..functions.translit import sql_has_cyrillic
 from ..session import local_df
 from ..synth import CYR_NAMES, HOT2_LAT0, HOT2_LON0, HOT_LAT0, HOT_LON0
-from .checks import APPLICABLE_PLACES, DEFAULT_MAPS
-from .spans import with_flat_entity
+from .checks import DEFAULT_MAPS, auth_name, lint_checks, lint_frame
 
 
 def guess_shape(i: int) -> int:
@@ -69,33 +77,57 @@ def _guess_dim():
 GUESS_PAGES, GUESS_LINKS = _guess_dim()
 
 
-def wiki_guess_df(spark, docs, wikipedia_mode: str = "missing", maps=DEFAULT_MAPS):
-    """Disambiguation-walk guesses, PER MAP:
-    (doc_id, map_name, name, guess_title, depth).
+#: the checks a walk guess fixes: C6 adds the missing ``wikipedia`` tag
+#: (``src/checks.py:401-432``), C7 replaces a non-Serbian entry
+#: (``src/checks.py:476-494``). Their error sets are disjoint (C7 needs the
+#: tag that C6 needs absent), so one walk serves both, each row told
+#: apart by ``h_wp``.
+C6 = "checks.WikipediaEntryExistsCheck"
+C7 = "checks.WikipediaEntryIsInSerbianCheck"
 
-    ``wikipedia_mode`` selects which fix the guesses feed:
-      * ``"missing"`` — C6 (WikipediaEntryExistsCheck.fix,
-        ``src/checks.py:401-432``): wikipedia tag absent;
-      * ``"non_sr"`` — C7 (WikipediaEntryIsInSerbianCheck.fix,
-        ``src/checks.py:476-494``): wikipedia present but not ``sr:``.
 
-    Eligibility mirrors the reference fix gates exactly:
-      * applicable place, mode predicate, not country-excluded (the
-        excluded entity's ``do_check`` returns '' so no fix runs);
-      * NameMissingCheck passes — the ``name`` tag present and non-empty
-        on EVERY map (``src/checks.py:201-205`` always reads ``name``);
-      * NameCyrillicCheck passes — map-aware tag
-        (``src/checks.py:217-231``): ``name`` must be Cyrillic on the
-        Serbia map, ``name:sr`` (when present) on other maps.
+def walk_entities(ent, checks, *fixed):
+    """The walk's input over the lint frame ``ent``:
+    (doc_id, map_name, h_wp, name, e_lat, e_lon) for every row where one
+    of the ``fixed`` checks errs and its fix gates pass. The gates are the
+    check predicates of :func:`.checks.lint_checks`:
+      * NameMissingCheck passes — ``name`` present and non-empty on EVERY
+        map (``src/checks.py:201-205`` always reads ``name``);
+      * NameCyrillicCheck passes — map-aware (``src/checks.py:217-231``);
+      * the C6/C7 errors themselves exclude ``is_in:country`` entities
+        outside Serbia (their ``do_check`` returns '', so no fix runs).
 
-    The walked name is per map too (``src/checks.py:409-410,477-478``):
-    ``tags['name']`` when 'Serbia checks' is in the map name, else
-    ``tags['name:sr']``. One deviation: a non-Serbia-map entity WITHOUT
+    The walked name is the map's authoritative name
+    (``src/checks.py:409-410,477-478``): ``name`` on the Serbia map,
+    ``name:sr`` elsewhere. One deviation: a non-Serbia-map entity WITHOUT
     ``name:sr`` makes the reference raise ``KeyError`` inside ``fix``
     (only ``ElementDeletedApiError`` is caught, ``src/engine.py:38-44``);
-    a crash is not expressible as data, so the engine emits no guess row
-    for it instead.
-    """
+    a crash is not expressible as data, so the walk takes only rows whose
+    walked name is non-empty."""
+    from pyspark.sql import functions as F
+
+    def err(name):
+        return F.coalesce(checks[name].err, F.lit(False))
+
+    walk_name = auth_name()
+    return ent.filter(
+        reduce(operator.or_, map(err, fixed))
+        & ~err("checks.NameMissingCheck")
+        & ~err("checks.NameCyrillicCheck")
+        & (F.coalesce(walk_name, F.lit("")) != "")
+    ).select(
+        "doc_id",
+        "map_name",
+        "h_wp",
+        walk_name.alias("name"),
+        F.col("lat").alias("e_lat"),
+        F.col("lon").alias("e_lon"),
+    )
+
+
+def guess_walk(spark, e):
+    """Best guess per (doc_id, map_name) of :func:`walk_entities` rows:
+    their columns but the coords, plus ``guess_title`` and ``depth``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -103,48 +135,7 @@ def wiki_guess_df(spark, docs, wikipedia_mode: str = "missing", maps=DEFAULT_MAP
         local_df(spark, GUESS_PAGES, "title string, is_disambig boolean, lat double, lon double")
     )
     links = F.broadcast(local_df(spark, GUESS_LINKS, "parent string, ord int, child string"))
-
-    ent = with_flat_entity(docs)
-    maps_structs = F.array(
-        *[
-            F.struct(F.lit(m).alias("map_name"), F.lit(s).alias("is_serbia"))
-            for m, s in maps
-        ]
-    )
-    ent = (
-        ent.select("*", F.explode(maps_structs).alias("_m"))
-        .select(
-            "*",
-            F.col("_m.map_name").alias("map_name"),
-            F.col("_m.is_serbia").alias("is_serbia"),
-        )
-        .drop("_m")
-    )
-    excl = F.col("h_isin") & (F.col("a_isin") != "Serbia")
-    if wikipedia_mode == "missing":
-        wp_pred = ~F.col("h_wp")
-    elif wikipedia_mode == "non_sr":
-        wp_pred = F.col("h_wp") & ~F.col("a_wp").startswith("sr:")
-    else:
-        raise ValueError(wikipedia_mode)
-    nonempty_sr = F.coalesce(F.col("a_name_sr"), F.lit("")) != ""
-    cyr_gate = F.when(F.col("is_serbia"), has_cyrillic_col(F.col("a_name"))).otherwise(
-        nonempty_sr & has_cyrillic_col(F.col("a_name_sr"))
-    )
-    walk_name = F.when(F.col("is_serbia"), F.col("a_name")).otherwise(F.col("a_name_sr"))
-    e = ent.filter(
-        F.col("a_place").isin(*APPLICABLE_PLACES)
-        & wp_pred
-        & ~F.coalesce(excl, F.lit(False))
-        & (F.coalesce(F.col("a_name"), F.lit("")) != "")
-        & cyr_gate
-    ).select(
-        "doc_id",
-        "map_name",
-        walk_name.alias("name"),
-        F.col("lat").alias("e_lat"),
-        F.col("lon").alias("e_lon"),
-    )
+    cols = [c for c in e.columns if c not in ("e_lat", "e_lon")]
 
     def valid_win(p_prefix, df, key_col):
         dist = haversine_km_col(
@@ -155,9 +146,7 @@ def wiki_guess_df(spark, docs, wikipedia_mode: str = "missing", maps=DEFAULT_MAP
             & F.col(f"{p_prefix}_lat").isNotNull()
             & (dist <= 20.0)
         ).select(
-            "doc_id",
-            "map_name",
-            "name",
+            *cols,
             F.col(f"{p_prefix}_title").alias("guess_title"),
             key_col.alias("path_key"),
         )
@@ -200,14 +189,15 @@ def wiki_guess_df(spark, docs, wikipedia_mode: str = "missing", maps=DEFAULT_MAP
     return (
         cands.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "map_name",
-            "name",
-            "guess_title",
-            (F.length("path_key") / 2 + 1).cast("int").alias("depth"),
-        )
+        .select(*cols, "guess_title", (F.length("path_key") / 2 + 1).cast("int").alias("depth"))
     )
+
+
+def wiki_guess_df(spark, docs, maps=DEFAULT_MAPS):
+    """C6's disambiguation-walk guesses, PER MAP:
+    (doc_id, map_name, name, guess_title, depth)."""
+    ent = lint_frame(docs, maps)
+    return guess_walk(spark, walk_entities(ent, lint_checks(), C6)).drop("h_wp")
 
 
 # ---------------------------------------------------------------------- sql

@@ -46,11 +46,17 @@ def write_table(df, path: str, mode: str = "overwrite", partition_by=None):
 
 
 def read_table(spark, path: str):
+    """Iceberg if the jars are present and a table lives at ``path``,
+    else parquet. Only "no such table" falls back; any other Iceberg
+    error propagates instead of hiding behind a parquet read."""
     if iceberg_available():
+        from pyspark.errors import AnalysisException
+
         try:
             return spark.read.format("iceberg").load(path)
-        except Exception:
-            pass
+        except AnalysisException as e:
+            if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                raise
     return spark.read.parquet(path)
 
 

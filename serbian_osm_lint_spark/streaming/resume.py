@@ -181,9 +181,9 @@ def run_resumable(
         return len(list(pool.map(run_bucket, pending)))
 
 
-def read_result(spark, out_dir: str, n_buckets: int | None = None):
-    """Union of all completed bucket outputs (discovered by glob, so a
-    caller's bucket-count guess can't hide written buckets)."""
+def read_result(spark, out_dir: str):
+    """Union of all completed bucket outputs (discovered by glob, so no
+    bucket count is needed to find them)."""
     import glob
 
     paths = [

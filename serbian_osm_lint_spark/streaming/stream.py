@@ -121,67 +121,13 @@ def stream_decontaminate(spark, train_path: str, holdout_grams, out_dir: str, ch
     return _run_available_now(src, process_batch, checkpoint_dir)
 
 
-def stream_near_dup_pairs(
-    spark, texts_path: str, sig_table, out_dir: str, checkpoint_dir: str, threshold=None
-):
-    """Streaming MinHash near-dup dedup (VERDICT r5 item 4): arriving
-    docs' band keys are joined STREAM-STATIC against the frozen stored
-    signature table (:func:`..operators.dedup.minhash_sig_table`) — the
-    decontamination shape applied to LSH bands, completing the streaming
-    story for the dedup family (exact dedup already streams).
-
-    Each micro-batch computes its arrivals' signatures per-row (no
-    stream-side shuffle) and runs the shared two-sided skinny-fetch
-    verified-pair join (r6: the static side's band shuffle carries only
-    (band_key, doc_id); its fat shingle sets move only for the few
-    candidate pairs — the stored table is re-scanned with column
-    pruning instead of shuffling its arrays every micro-batch).
-    The ``doc_id_a < doc_id_b`` filter makes emission exactly-once by
-    construction: a pair appears only in the micro-batch where its
-    larger id arrives, so the union over batches equals the batch face
-    with NO cross-batch dedup state — unlike ``dropDuplicates``, nothing
-    accumulates in the state store.
-
-    PRECONDITION (ADVICE r6): completeness requires that every doc in the
-    frozen signature table is EVENTUALLY replayed through the stream — a
-    pair whose larger member lives only in the frozen table (never
-    streamed) is never emitted, because emission is tied to the larger
-    id's arrival. This face fits the re-scan/migration topology (stream =
-    replay of the corpus against its own frozen index). For genuinely
-    NEW documents arriving over time, use
-    :func:`stream_near_dup_pairs_incremental`, which appends arrivals'
-    signatures and has no replay precondition. The sink is retry-safe
-    (per-batch overwrite, :func:`write_batch_idempotent`). Returns
-    batches executed."""
-    from ..operators import dedup
-
-    thr = dedup.JACCARD_THRESHOLD if threshold is None else threshold
-
-    schema = "doc_id long, text string"
-
-    def process_batch(batch_df, batch_id):
-        arrivals = dedup._shingled_sig_from(batch_df)
-        pairs = dedup.verified_pairs_skinny_fetch(
-            sig_table, thr, sig_b=arrivals, broadcast_b=True
-        )
-        write_batch_idempotent(pairs, os.path.join(out_dir, "pairs"), batch_id)
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
-        .parquet(texts_path)
-    )
-    return _run_available_now(src, process_batch, checkpoint_dir)
-
-
 def stream_near_dup_pairs_incremental(
     spark, texts_path: str, sig_dir: str, out_dir: str, checkpoint_dir: str, threshold=None
 ):
     """INCREMENTAL streaming MinHash dedup (VERDICT r6 item 1): genuinely
     new documents arrive over time, and the signature table GROWS with
-    them — the steady-state topology of a continuously-ingesting corpus,
-    with no replay precondition (cf. :func:`stream_near_dup_pairs`, the
-    frozen-table re-scan face).
+    them — the steady-state topology of a continuously-ingesting corpus;
+    no doc has to be replayed through the stream for its pairs to surface.
 
     Per micro-batch:
 

@@ -1,12 +1,14 @@
 # -*- coding: utf-8 -*-
 """The per-query profiler (scripts/profile.py): one run over four
-registry queries writes every key and plan, opens its window before the
+registry queries writes every key, executed plan and diffable optimized
+plan, opens its window before the
 query function is called (the SimHash recompute face's checkpoint runs
 while its plan is built), and counts the Python-worker nodes the media
 faces' ``mapInPandas`` runs."""
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -34,6 +36,11 @@ def test_profile_records_every_query_and_python_stage(spark, tmp_path):
         assert KEYS <= set(rec), name
         assert rec["stage_tasks"] and all(n > 0 for n in rec["stage_tasks"].values()), name
         assert (tmp_path / f"{name}.txt").stat().st_size > 0, name
+        # optimized logical plan, diffable across commits: no expression
+        # ids, no lambda-variable counters
+        plan = (tmp_path / f"{name}.optimized.txt").read_text()
+        assert plan and not re.search(r"#\d|lambda [a-z]_\d", plan), name
+    assert "lambda x" in (tmp_path / "lint_verdicts.optimized.txt").read_text()
 
     # the grouped-signature checkpoint executes inside the window, while
     # the plan is built, ahead of the consuming action

@@ -74,6 +74,21 @@ def test_proposed_fixes_consistent_with_verdicts(spark):
             assert r.new_val == "Serbia"
 
 
+def test_proposed_fixes_runs_the_guess_walk_once(spark):
+    """C6 and C7 share one guess walk over their disjoint error sets, so
+    the optimized plan holds exactly one Window (the walk's preorder
+    pick), not one per check."""
+    import re
+
+    from serbian_osm_lint_spark.operators import fixes
+    from serbian_osm_lint_spark.sources import catalog
+
+    docs = catalog.docs_table(spark, SF_SMALL)
+    wiki, _ = catalog.dims_tables(spark, SF_SMALL)
+    plan = fixes.proposed_fixes_df(spark, docs, wiki)._jdf.queryExecution().optimizedPlan()
+    assert len(re.findall(r"^[\s:|+-]*Window \[", plan.toString(), re.M)) == 1
+
+
 def test_guess_walk_tag_is_map_dependent(spark):
     """VERDICT r2 item 2: the walk uses `name` on the Serbia map and
     `name:sr` elsewhere (src/checks.py:409-410,477-478). An entity whose
