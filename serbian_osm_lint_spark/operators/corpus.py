@@ -56,8 +56,6 @@ def _docs_spread(spark, sf_dir: str):
     round-robin exchange of the raw (doc_id, text) rows buys full task
     parallelism for everything above it (a real 100 TB table arrives
     pre-split into many files/row-groups and skips this)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     return (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")

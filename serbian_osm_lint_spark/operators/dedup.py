@@ -46,8 +46,6 @@ perturbed copies via :func:`with_emb_dups_df`.
 
 from __future__ import annotations
 
-import os
-
 N_HASHES = 8
 N_BANDS = 4  # rows per band = N_HASHES // N_BANDS = 2
 JACCARD_THRESHOLD = 0.5
@@ -1003,8 +1001,7 @@ def emb_bucket_table(spark, sf_dir: str):
     from ..sources import catalog
     from .similarity import N_PLANE_SETS
 
-    path = f"{sf_dir}/embeddings.parquet"
-    n_raw = catalog.parquet_row_count(path)
+    n_raw = catalog.parquet_row_count(f"{sf_dir}/embeddings.parquet")
     # same corpus-size derivation as embedding_near_dups_df (dup'd corpus)
     n_planes = n_planes_for(n_raw + (n_raw + 4) // 5)
 
@@ -1018,11 +1015,10 @@ def emb_bucket_table(spark, sf_dir: str):
             ),
         )
 
-    key = os.path.basename(os.path.normpath(sf_dir))
     tbl = catalog.cached_table(
         spark,
-        f"emb_buckets_{key}_{EMB_BUCKET_VERSION}_{EMB_DUP_TAG}"
-        f"_p{n_planes}s{N_PLANE_SETS}_{catalog.fingerprint(path)}",
+        f"emb_buckets_{catalog.source_key(sf_dir, 'embeddings')}_{EMB_BUCKET_VERSION}"
+        f"_{EMB_DUP_TAG}_p{n_planes}s{N_PLANE_SETS}",
         build,
     )
     return tbl, n_planes

@@ -15,6 +15,21 @@
   flips, then exact cosine re-ranks the candidates. Recall < 1 by
   construction; the oracle replays the identical spec, so equality
   still holds.
+* :func:`ann_ivf_topk_df` / :func:`ann_ivf_topk_stored_df` — IVF: each
+  vector's best of 16 data-derived centroid cells (:func:`_ivf_assign`,
+  inline or the stored :func:`ivf_assignment_table`); each query probes
+  its top-``N_PROBE`` cells (:func:`_ivf_topk`).
+* :func:`ann_pq_topk_df` / :func:`ann_pq_topk_stored_df` — product
+  quantization: an ADC scan over 8 sub-codes per vector (inline or the
+  stored :func:`pq_code_table`), then an exact re-rank of the top
+  ``PQ_CANDS`` (:func:`pq_topk_frames`).
+
+All six faces read the corpus through :func:`_emb` / :func:`_emb_spread`,
+take their query set from :func:`_queries` (a recompute face over its own
+corpus frame, whose ``vec_id`` filter Catalyst pushes down to a pruned
+scan; a stored face over :func:`_emb`), and end in one tail:
+exact cosine (:func:`_cosine_scored`) and the ``(cosine desc,
+neighbor_id)`` top-k (:func:`_cosine_topk`).
 
 Float discipline: embeddings are float32; both engines cast elements to
 double *before* multiplying, and cosines are rounded to 6 decimals (libm
@@ -86,6 +101,25 @@ def _emb_spread(spark, sf_dir: str):
         .select("vec_id", "embedding")
         .repartition(n, "vec_id")
         .select("vec_id", _to_double(F.col("embedding")).alias("v"))
+    )
+
+
+def _emb(spark, sf_dir: str):
+    """The embeddings table as (vec_id, v:double[]), as scanned."""
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", _to_double(F.col("embedding")).alias("v")
+    )
+
+
+def _queries(emb, n_queries: int):
+    """(query_id, qv, qn): the ``vec_id < n_queries`` prefix of a (vec_id,
+    v) frame with its norms."""
+    from pyspark.sql import functions as F
+
+    return emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), _norm(F.col("v")).alias("qn")
     )
 
 
@@ -224,24 +258,36 @@ def _topk_per_query(scored, order_cols, k: int, rank_col: str | None = None):
     return ranked.withColumn(rank_col, F.col("_rn").cast("int")).drop("_rn")
 
 
-def ann_cosine_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIES):
-    """(query_id, neighbor_id, cosine, rank): brute-force top-k."""
-    from pyspark.sql import Window
+def _cosine_scored(cand):
+    """(query_id, neighbor_id, cosine) of candidate pairs carrying the
+    query side (query_id, qv, qn) and the corpus side (vec_id, v, vnorm);
+    a query is never its own neighbor."""
     from pyspark.sql import functions as F
 
-    emb = _emb_spread(spark, sf_dir).withColumn("vn", _norm(F.col("v")))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("vn").alias("qn")
-    )
-    pairs = emb.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select(
+    return cand.filter(F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        _cosine_pre(F.col("qv"), F.col("v"), F.col("qn"), F.col("vn")).alias("cosine"),
+        _cosine_pre(F.col("qv"), F.col("v"), F.col("qn"), F.col("vnorm")).alias("cosine"),
     )
+
+
+def _cosine_topk(scored, k: int):
+    """(query_id, neighbor_id, cosine, rank): the per-query top-``k`` of a
+    scored frame by (cosine desc, neighbor_id) — every face's tail."""
+    from pyspark.sql import functions as F
+
     return _topk_per_query(
         scored, [F.desc("cosine"), F.col("neighbor_id")], k, "rank"
     ).select("query_id", "neighbor_id", "cosine", "rank")
+
+
+def ann_cosine_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIES):
+    """(query_id, neighbor_id, cosine, rank): brute-force top-k."""
+    from pyspark.sql import functions as F
+
+    emb = _emb_spread(spark, sf_dir).withColumn("vnorm", _norm(F.col("v")))
+    pairs = emb.crossJoin(F.broadcast(_queries(emb, n_queries)))
+    return _cosine_topk(_cosine_scored(pairs), k)
 
 
 def ann_lsh_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIES):
@@ -251,51 +297,32 @@ def ann_lsh_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIE
     query probing its per-set bucket + the 1-bit flips; candidates are
     unioned across sets, deduped, then exact-cosine re-ranked. A true
     neighbor is missed only if EVERY set splits it by ≥ 2 planes."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..sources.catalog import parquet_row_count
     from .dedup import n_planes_for, probe_set_buckets_col, set_buckets_col
 
     n_planes = n_planes_for(parquet_row_count(f"{sf_dir}/embeddings.parquet"))
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", _to_double(F.col("embedding")).alias("v"))
-        .withColumn("vn", _norm(F.col("v")))
-    )
+    emb = _emb(spark, sf_dir).withColumn("vnorm", _norm(F.col("v")))
     corpus = emb.select(
         F.posexplode(set_buckets_col(F.col("v"), n_planes, N_PLANE_SETS)).alias(
             "set_id", "bucket"
         ),
         "vec_id",
         "v",
-        "vn",
+        "vnorm",
     )
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
+    queries = _queries(emb, n_queries).select(
         F.explode(
-            probe_set_buckets_col(F.col("v"), n_planes, N_PLANE_SETS, multiprobe=True)
+            probe_set_buckets_col(F.col("qv"), n_planes, N_PLANE_SETS, multiprobe=True)
         ).alias("p"),
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("vn").alias("qn"),
-    ).select(
-        F.col("p.set_id").alias("set_id"),
-        F.col("p.bucket").alias("bucket"),
         "query_id",
         "qv",
         "qn",
-    )
-    cand = corpus.join(F.broadcast(queries), ["set_id", "bucket"]).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cosine_pre(F.col("qv"), F.col("v"), F.col("qn"), F.col("vn")).alias("cosine"),
-    ).distinct()  # a candidate found by several sets/probes scores once
-    return _topk_per_query(
-        scored, [F.desc("cosine"), F.col("neighbor_id")], k, "rank"
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    ).select("p.*", "query_id", "qv", "qn")
+    cand = corpus.join(F.broadcast(queries), ["set_id", "bucket"])
+    # a candidate found by several sets/probes scores once
+    return _cosine_topk(_cosine_scored(cand).distinct(), k)
 
 
 N_CENTROIDS = 16
@@ -339,9 +366,7 @@ def data_centroids(spark, sf_dir: str) -> list[list[float]]:
     if cache_key in _CODEBOOK_CACHE:
         return _CODEBOOK_CACHE[cache_key]
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _to_double(F.col("embedding")).alias("v")
-    )
+    emb = _emb(spark, sf_dir)
     stratum = F.pmod(
         F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10).cast(
             "long"
@@ -387,8 +412,8 @@ def centroid_scores_col(v, centroids: list[list[float]]):
     return F.zip_with(cb, norms, lambda c, nm: F.round(_dot(v, c) / nm, 6))
 
 
-def _probe_cells_col(cscores, n_probe: int = None):
-    """Array of the 1-based cells of the top-``n_probe`` centroid scores,
+def _probe_cells_col(cscores):
+    """Array of the 1-based cells of the top-``N_PROBE`` centroid scores,
     ordered by (score desc, position asc) — the EXACT selection the old
     posexplode + row_number window made, computed per row with array ops
     instead (r8, guide §2.4: the window's exchange + sort was a whole
@@ -397,7 +422,6 @@ def _probe_cells_col(cscores, n_probe: int = None):
     exactly, ties fall to the smaller position."""
     from pyspark.sql import functions as F
 
-    n_probe = N_PROBE if n_probe is None else n_probe
     idx = F.sequence(F.lit(1), F.size(cscores))
     pairs = F.zip_with(
         cscores, idx, lambda s, p: F.struct(s.alias("score"), p.alias("pos"))
@@ -408,7 +432,40 @@ def _probe_cells_col(cscores, n_probe: int = None):
         .when(a["score"] < b["score"], F.lit(1))
         .otherwise(a["pos"] - b["pos"]),
     )
-    return F.transform(F.slice(srt, 1, n_probe), lambda x: x["pos"])
+    return F.transform(F.slice(srt, 1, N_PROBE), lambda x: x["pos"])
+
+
+def _ivf_assign(emb, cents: list[list[float]]):
+    """The IVF store row ``(vec_id, v, vnorm, cell)`` over a ``(vec_id,
+    v)`` frame: each vector's best-scoring centroid cell and its norm —
+    the one assignment behind the stored table and the recompute face."""
+    from pyspark.sql import functions as F
+
+    scored = emb.withColumn("cscores", centroid_scores_col(F.col("v"), cents))
+    return scored.select(
+        "vec_id",
+        "v",
+        _norm(F.col("v")).alias("vnorm"),
+        F.array_position(F.col("cscores"), F.array_max("cscores")).alias("cell"),
+    )
+
+
+def _ivf_topk(corpus, queries, cents: list[list[float]], k: int):
+    """Probe + re-rank shared by both IVF faces: each query of
+    :func:`_queries` probes its top-``N_PROBE`` cells via per-row array
+    top-n (:func:`_probe_cells_col` — same (score desc, pos asc) selection
+    as a posexplode + window, without the window's exchange + sort job),
+    and the cells' :func:`_ivf_assign` rows are exact-cosine re-ranked."""
+    from pyspark.sql import functions as F
+
+    probes = queries.select(
+        "query_id",
+        "qv",
+        "qn",
+        F.explode(_probe_cells_col(centroid_scores_col(F.col("qv"), cents))).alias("cell"),
+    )
+    cand = corpus.join(F.broadcast(probes), "cell")
+    return _cosine_topk(_cosine_scored(cand), k)
 
 
 def ann_ivf_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIES):
@@ -420,38 +477,9 @@ def ann_ivf_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIE
     by construction, and the DuckDB oracle replays the identical
     deterministic spec (same stratum rule, same arg-min representative).
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     cents = data_centroids(spark, sf_dir)
-    emb = _emb_spread(spark, sf_dir)
-    scored = emb.withColumn("cscores", centroid_scores_col(F.col("v"), cents))
-    corpus = scored.select(
-        "vec_id",
-        "v",
-        _norm(F.col("v")).alias("vn"),
-        F.array_position(F.col("cscores"), F.array_max("cscores")).alias("cell"),
-    )
-    # queries: top-N_PROBE centroids each via per-row array top-n
-    # (_probe_cells_col) — same (score desc, pos asc) selection as the
-    # old posexplode+window, without the window's exchange + sort job
-    probes = scored.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
-        F.explode(_probe_cells_col(F.col("cscores"))).alias("cell"),
-    )
-    cand = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored_pairs = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cosine_pre(F.col("qv"), F.col("v"), F.col("qn"), F.col("vn")).alias("cosine"),
-    )
-    return _topk_per_query(
-        scored_pairs, [F.desc("cosine"), F.col("neighbor_id")], k, "rank"
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    corpus = _ivf_assign(_emb_spread(spark, sf_dir), cents)
+    return _ivf_topk(corpus, _queries(corpus, n_queries), cents, k)
 
 
 #: bump when the IVF assignment derivation changes (invalidates stored tables).
@@ -461,7 +489,7 @@ IVF_VERSION = "v2"
 
 
 def ivf_assignment_table(spark, sf_dir: str):
-    """The STORED IVF assignment table ``(vec_id, v, cell)`` — the
+    """The STORED IVF assignment table ``(vec_id, v, vnorm, cell)`` — the
     coarse-quantizer assignment computed ONCE at ingest (VERDICT r6 item
     4, completing the ingest-once family next to
     ``dedup.minhash_sig_table`` / ``simhash_sig_table``), written via the
@@ -474,30 +502,13 @@ def ivf_assignment_table(spark, sf_dir: str):
     The cache key carries the embeddings table's content fingerprint
     (size+mtime digest — no data read), so a rewritten corpus rebuilds
     the assignment instead of serving stale cells."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..sources import catalog
 
     cents = data_centroids(spark, sf_dir)
-    path = f"{sf_dir}/embeddings.parquet"
-
-    def build():
-        emb = _emb_spread(spark, sf_dir)
-        scored = emb.withColumn("cscores", centroid_scores_col(F.col("v"), cents))
-        return scored.select(
-            "vec_id",
-            "v",
-            _norm(F.col("v")).alias("vnorm"),
-            F.array_position(F.col("cscores"), F.array_max("cscores")).alias("cell"),
-        )
-
-    key = os.path.basename(os.path.normpath(sf_dir))
     return catalog.cached_table(
         spark,
-        f"ivf_assign_{key}_{IVF_VERSION}_{catalog.fingerprint(path)}",
-        build,
+        f"ivf_assign_{catalog.source_key(sf_dir, 'embeddings')}_{IVF_VERSION}",
+        lambda: _ivf_assign(_emb_spread(spark, sf_dir), cents),
         partition_by=["cell"],
     )
 
@@ -509,37 +520,13 @@ def ann_ivf_topk_stored_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N
     per query. The probe side is a tiny broadcast (``n_queries × N_PROBE``
     rows), so Spark's dynamic partition pruning turns the ``cell``
     equi-join into reading only the probed cells' partition directories
-    (asserted in tests/test_plan_shape.py)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    (asserted in tests/test_plan_shape.py). The query side is the
+    ``n_queries`` vectors re-read from the source table (a tiny
+    min/max-pruned scan); their centroid scores are n_queries × 16 dot
+    products — independent of corpus size."""
     cents = data_centroids(spark, sf_dir)
-    corpus = ivf_assignment_table(spark, sf_dir)
-    # query side: the n_queries vectors re-read from the source table (a
-    # tiny min/max-pruned scan); their centroid scores are n_queries × 16
-    # dot products — independent of corpus size.
-    queries = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") < n_queries)
-        .select("vec_id", _to_double(F.col("embedding")).alias("v"))
-    )
-    probes = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
-        F.explode(_probe_cells_col(centroid_scores_col(F.col("v"), cents))).alias("cell"),
-    )
-    cand = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored_pairs = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cosine_pre(F.col("qv"), F.col("v"), F.col("qn"), F.col("vnorm")).alias("cosine"),
-    )
-    return _topk_per_query(
-        scored_pairs, [F.desc("cosine"), F.col("neighbor_id")], k, "rank"
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    queries = _queries(_emb(spark, sf_dir), n_queries)
+    return _ivf_topk(ivf_assignment_table(spark, sf_dir), queries, cents, k)
 
 
 # -------------------------------------------------------------------- sql
@@ -779,18 +766,12 @@ def pq_code_table(spark, sf_dir: str):
     (id, 8 codes, norm) projection; full vectors are fetched BY ID only
     for the PQ_CANDS re-rank survivors. Cache key carries the embeddings
     content fingerprint, so a rewritten corpus re-encodes."""
-    import os
-
     from ..sources import catalog
 
-    path = f"{sf_dir}/embeddings.parquet"
-    key = os.path.basename(os.path.normpath(sf_dir))
-
-    def build():
-        return _pq_encoded(spark, sf_dir).drop("v")
-
     return catalog.cached_table(
-        spark, f"pq_codes_{key}_{PQ_VERSION}_{catalog.fingerprint(path)}", build
+        spark,
+        f"pq_codes_{catalog.source_key(sf_dir, 'embeddings')}_{PQ_VERSION}",
+        lambda: _pq_encoded(spark, sf_dir).drop("v"),
     )
 
 
@@ -801,9 +782,7 @@ def _pq_topk(spark, sf_dir: str, encoded, k: int, n_queries: int):
     from pyspark.sql import functions as F
 
     cents = data_centroids(spark, sf_dir)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _to_double(F.col("embedding")).alias("v")
-    )
+    emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < n_queries)
     return pq_topk_frames(spark, encoded, queries, emb, cents, k)
 
@@ -818,8 +797,7 @@ def pq_topk_frames(spark, encoded, queries, fetch, cents, k: int):
     corpus row is Σ_m lut_m[codes[m]] / (qnorm · vnorm), rounded — ZERO
     vector math per (query, corpus) pair, just PQ_M array lookups over
     the skinny scan. Top PQ_CANDS by (adc, id) → fetch full vectors by
-    id from ``fetch`` → exact-cosine top-k."""
-    from pyspark.sql import Window
+    id from ``fetch`` → exact-cosine top-k (:func:`_cosine_topk`)."""
     from pyspark.sql import functions as F
 
     # the ADC pass is the corpus-proportional stage: if the stored code
@@ -832,7 +810,6 @@ def pq_topk_frames(spark, encoded, queries, fetch, cents, k: int):
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if encoded.rdd.getNumPartitions() < shuffle_p:
         encoded = encoded.repartition(shuffle_p)
-    emb = fetch
     cb = _cb_lit(cents)  # one nested-array literal, memoized per codebook
     luts = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -873,16 +850,11 @@ def pq_topk_frames(spark, encoded, queries, fetch, cents, k: int):
     qv = queries.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     rer = (
         F.broadcast(cands)
-        .join(emb, cands.neighbor_id == emb.vec_id)
+        .join(fetch, cands.neighbor_id == fetch.vec_id)
         .join(F.broadcast(qv), "query_id")
         .select("query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _cosine_topk(rer, k)
 
 
 def ann_pq_topk_df(spark, sf_dir: str, k: int = TOPK, n_queries: int = N_QUERIES):
@@ -1025,9 +997,7 @@ def resumable_pq_screen(
         )
     cents = data_centroids(spark, sf_dir)
     encoded = pq_code_table(spark, sf_dir)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _to_double(F.col("embedding")).alias("v")
-    )
+    emb = _emb(spark, sf_dir)
     # run_resumable's ad-hoc hash bucketing keys on doc_id
     queries_all = emb.select(F.col("vec_id").alias("doc_id"), "v")
 

@@ -5,8 +5,8 @@ Reference ``_guess_from_wikipedia`` (``src/checks.py:46-134``): look up the
 entity name; a page with a valid place box wins iff its coords are present
 and ≤ 20 km from the entity (``:124-131``); a disambiguation page recurses
 into its links in order (``:116-119``), preorder DFS, bailing at depth > 3
-(``:69-71``). That per-entity recursive network walk becomes three
-LEFT-JOIN levels against two small broadcast dims:
+(``:69-71``). That per-entity recursive network walk becomes three join
+levels over two small broadcast dims, which the entities then join once:
 
   * ``pages(title, is_disambig, lat, lon)``
   * ``links(parent, ord, child)``
@@ -127,7 +127,13 @@ def walk_entities(ent, checks, *fixed):
 
 def guess_walk(spark, e):
     """Best guess per (doc_id, map_name) of :func:`walk_entities` rows:
-    their columns but the coords, plus ``guess_title`` and ``depth``."""
+    their columns but the coords, plus ``guess_title`` and ``depth``.
+
+    The walk runs over the dims alone first: ``pages`` ⋈ ``links`` for up
+    to three levels gives every (root, title, lat, lon, path_key) page a
+    walk from ``root`` could end on — not a disambiguation page, coords
+    present. The entities then take ONE broadcast join on ``name = root``
+    (their input is scanned once), the 20 km test, and the preorder pick."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -137,54 +143,32 @@ def guess_walk(spark, e):
     links = F.broadcast(local_df(spark, GUESS_LINKS, "parent string, ord int, child string"))
     cols = [c for c in e.columns if c not in ("e_lat", "e_lon")]
 
-    def valid_win(p_prefix, df, key_col):
-        dist = haversine_km_col(
-            F.col("e_lat"), F.col("e_lon"), F.col(f"{p_prefix}_lat"), F.col(f"{p_prefix}_lon")
-        )
-        return df.filter(
-            (~F.col(f"{p_prefix}_disambig"))
-            & F.col(f"{p_prefix}_lat").isNotNull()
-            & (dist <= 20.0)
-        ).select(
-            *cols,
-            F.col(f"{p_prefix}_title").alias("guess_title"),
-            key_col.alias("path_key"),
-        )
-
-    def page_alias(prefix):
-        return pages.select(
-            F.col("title").alias(f"{prefix}_title"),
-            F.col("is_disambig").alias(f"{prefix}_disambig"),
-            F.col("lat").alias(f"{prefix}_lat"),
-            F.col("lon").alias(f"{prefix}_lon"),
+    def step(level):
+        """One more link from a disambiguation page of ``level``."""
+        return (
+            level.filter(F.col("is_disambig"))
+            .join(links, F.col("title") == F.col("parent"))
+            .select(
+                "root",
+                F.col("child").alias("title"),
+                F.concat("path_key", F.lpad(F.col("ord").cast("string"), 2, "0")).alias("path_key"),
+            )
+            .join(pages, "title")
         )
 
-    d1 = e.join(page_alias("p1"), e["name"] == F.col("p1_title"))
-    w1 = valid_win("p1", d1, F.lit(""))
-
-    l1 = links.select(
-        F.col("parent").alias("l1_parent"), F.col("ord").alias("l1_ord"), F.col("child").alias("l1_child")
+    d1 = pages.select(F.col("title").alias("root"), "*", F.lit("").alias("path_key"))
+    d2 = step(d1)
+    paths = (
+        d1.unionByName(d2)
+        .unionByName(step(d2))
+        .filter(~F.col("is_disambig") & F.col("lat").isNotNull())
     )
-    d2 = (
-        d1.filter(F.col("p1_disambig"))
-        .join(l1, F.col("p1_title") == F.col("l1_parent"))
-        .join(page_alias("p2"), F.col("l1_child") == F.col("p2_title"))
+    dist = haversine_km_col(F.col("e_lat"), F.col("e_lon"), F.col("lat"), F.col("lon"))
+    cands = (
+        e.join(F.broadcast(paths), e["name"] == F.col("root"))
+        .filter(dist <= 20.0)
+        .select(*cols, F.col("title").alias("guess_title"), "path_key")
     )
-    key2 = F.lpad(F.col("l1_ord").cast("string"), 2, "0")
-    w2 = valid_win("p2", d2, key2)
-
-    l2 = links.select(
-        F.col("parent").alias("l2_parent"), F.col("ord").alias("l2_ord"), F.col("child").alias("l2_child")
-    )
-    d3 = (
-        d2.filter(F.col("p2_disambig"))
-        .join(l2, F.col("p2_title") == F.col("l2_parent"))
-        .join(page_alias("p3"), F.col("l2_child") == F.col("p3_title"))
-    )
-    key3 = F.concat(key2, F.lpad(F.col("l2_ord").cast("string"), 2, "0"))
-    w3 = valid_win("p3", d3, key3)
-
-    cands = w1.unionByName(w2).unionByName(w3)
     w = Window.partitionBy("doc_id", "map_name").orderBy("path_key")
     return (
         cands.withColumn("rn", F.row_number().over(w))

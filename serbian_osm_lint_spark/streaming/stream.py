@@ -157,8 +157,6 @@ def stream_near_dup_pairs_incremental(
     candidates). At 10^12 docs the arrivals side is tiny per batch, so
     each micro-batch costs one pruned scan of the store, not a
     recompute. Returns micro-batches executed this invocation."""
-    from pyspark.sql import functions as F
-
     from ..operators import dedup
 
     thr = dedup.JACCARD_THRESHOLD if threshold is None else threshold

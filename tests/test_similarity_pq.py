@@ -3,12 +3,13 @@
 
 Oracle parity for both faces is covered by test_oracle_duckdb's
 parametrization (ann_pq_topk / ann_pq_topk_stored share one SQL twin).
-Here: the face-equivalence, recall, and plan-shape properties the oracle
-can't see."""
+Here: the face-equivalence (PQ and IVF), recall, and plan-shape
+properties the oracle can't see."""
 
 import io
 import contextlib
 
+import pytest
 from conftest import SF_SMALL
 
 
@@ -19,18 +20,19 @@ def _plan(df):
     return buf.getvalue()
 
 
-def test_pq_stored_equals_recompute(spark):
-    """Storage topology is invisible: the stored-code face returns the
-    exact frame of the inline-encode face."""
+@pytest.mark.parametrize("face", ["pq", "ivf"])
+def test_pq_stored_equals_recompute(spark, face):
+    """Storage topology is invisible: the stored-table face (PQ codes, IVF
+    cells) returns the exact frame of its inline-recompute face — also
+    off the oracle gate's defaults (k=5, n_queries=20)."""
     from serbian_osm_lint_spark.operators import similarity
 
-    a = sorted(
-        map(tuple, similarity.ann_pq_topk_df(spark, SF_SMALL).collect())
-    )
-    b = sorted(
-        map(tuple, similarity.ann_pq_topk_stored_df(spark, SF_SMALL).collect())
-    )
-    assert a == b and len(a) > 0
+    def rows(fn):
+        return sorted(map(tuple, fn(spark, SF_SMALL, k=7, n_queries=30).collect()))
+
+    a = rows(getattr(similarity, f"ann_{face}_topk_df"))
+    b = rows(getattr(similarity, f"ann_{face}_topk_stored_df"))
+    assert a == b and len(a) == 30 * 7
 
 
 def test_pq_recall_floor_vs_brute_force(spark):

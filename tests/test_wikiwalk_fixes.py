@@ -2,6 +2,7 @@
 """J3 disambiguation walk: planted shapes behave per the reference bound
 (src/checks.py:46-134); S8 proposed fixes stay consistent with verdicts."""
 
+import pytest
 from conftest import SF_SMALL
 
 from serbian_osm_lint_spark.synth import CYR_NAMES
@@ -87,6 +88,26 @@ def test_proposed_fixes_runs_the_guess_walk_once(spark):
     wiki, _ = catalog.dims_tables(spark, SF_SMALL)
     plan = fixes.proposed_fixes_df(spark, docs, wiki)._jdf.queryExecution().optimizedPlan()
     assert len(re.findall(r"^[\s:|+-]*Window \[", plan.toString(), re.M)) == 1
+
+
+@pytest.mark.parametrize("query, scans", [("wiki_guess", 1), ("proposed_fixes", 2)])
+def test_guess_walk_scans_its_entities_once(spark, query, scans):
+    """The walk joins its dims first and its entities once, so the doc
+    table (the relation carrying ``spans``) is scanned once per walk —
+    plus once for ``proposed_fixes``' tag-fix branch — not per level."""
+    import re
+
+    from serbian_osm_lint_spark.operators import fixes, wikiwalk
+    from serbian_osm_lint_spark.sources import catalog
+
+    docs = catalog.docs_table(spark, SF_SMALL)
+    wiki, _ = catalog.dims_tables(spark, SF_SMALL)
+    df = {
+        "wiki_guess": lambda: wikiwalk.wiki_guess_df(spark, docs),
+        "proposed_fixes": lambda: fixes.proposed_fixes_df(spark, docs, wiki),
+    }[query]()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^[\s:|+-]*Relation \[[^\]]*\bspans#", plan, re.M)) == scans
 
 
 def test_guess_walk_tag_is_map_dependent(spark):
