@@ -14,8 +14,9 @@ The job writes the long verdict table (bucket-partitioned; re-running
 with the same ``--out`` resumes, skipping the buckets the manifest in
 <out>/_manifest marks done) and prints run metrics (S9: the Spark
 equivalent of the reference's every-100k progress counter —
-``src/sources/osm_source.py:28-30`` — is the observe() row/error count
-plus per-bucket lineage rows).
+``src/sources/osm_source.py:28-30`` — is each bucket's observe() row,
+error and fixable-error counts in its manifest marker, plus their
+totals).
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ def main():
 
     from serbian_osm_lint_spark.operators import report
     from serbian_osm_lint_spark.operators.checks import lint_verdicts_df
+    from serbian_osm_lint_spark.plans.lint_pipeline import verdict_metrics
     from serbian_osm_lint_spark.sources import catalog
     from serbian_osm_lint_spark.streaming import resume
 
@@ -47,7 +49,9 @@ def main():
 
     docs = catalog.docs_table(spark, args.sf_dir)
     # the stored doc table fixes the bucket domain (catalog.N_DOC_BUCKETS)
-    processed = resume.run_resumable(spark, docs, process, args.out)
+    processed = resume.run_resumable(
+        spark, docs, process, args.out, metrics_fn=verdict_metrics
+    )
     manifest = resume.BucketManifest(f"{args.out}/_manifest")
     lineage = manifest.done_buckets()
     verdicts = resume.read_result(spark, args.out)
@@ -57,6 +61,10 @@ def main():
         "rows_per_bucket": {str(b): m["rows"] for b, m in sorted(lineage.items())},
         "total_verdicts": sum(m["rows"] for m in lineage.values()),
     }
+    for name in ("n_errors", "n_fixable"):
+        # None when a bucket was done by an older run that did not count it
+        per_bucket = [m.get(name) for m in lineage.values()]
+        metrics[f"total_{name[2:]}"] = None if None in per_bucket else sum(per_bucket)
     print(json.dumps(metrics))
 
     if args.report:

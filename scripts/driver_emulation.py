@@ -5,37 +5,33 @@ run the queries() entries side-by-side with their oracle_sql() on DuckDB
 and compare row-count + schema + order-insensitive value hash. Naming
 queries runs only those — the fast inner loop while optimizing a single
 operator. Cores come from SPARK_GRAFT_CPUS; tests import ``norm``/``vhash``.
+The normal form and hash are ``perfbench/run.py``'s check rule, imported,
+so the replay and the benchmark compare results one way.
 
 Usage: python scripts/driver_emulation.py [--sf DIR] [query ...]
 """
 import argparse
-import hashlib
 import importlib.util
 import os
 import sys
 
 import duckdb
-import pandas as pd
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if ROOT not in sys.path:
+    sys.path.insert(0, ROOT)
+
+from perfbench.run import digest, norm  # noqa: E402
 
 ap = argparse.ArgumentParser()
 ap.add_argument("--sf", default="/root/testdata/sf0.01", help="data directory")
 ap.add_argument("queries", nargs="*", help="queries() names (default: all)")
 
 
-def norm(df: pd.DataFrame) -> pd.DataFrame:
-    """Columns by name, floats to 6 decimals, values as strings, rows sorted."""
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if str(df[c].dtype).startswith("float"):
-            df[c] = df[c].round(6)
-        df[c] = df[c].astype(str)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
-def vhash(df: pd.DataFrame) -> str:
-    return hashlib.md5(df.to_csv(index=False).encode()).hexdigest()
+def vhash(df) -> str:
+    """md5 of the normal form (``norm`` is idempotent, so a normed frame
+    hashes as itself)."""
+    return digest(df)["md5"]
 
 
 def main():

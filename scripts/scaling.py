@@ -173,14 +173,10 @@ def _minhash_job(spark, d, files=None):
 def _decontam_job(spark, d):
     """Gram hashing, explode, distinct holdout grams, one equi-join on
     the gram hash, per-doc count, left join back."""
-    p = corpus.split_col(F.col("doc_id"))
-    split = (
-        F.when(p < corpus.TRAIN_PCT, F.lit("train"))
-        .when(p < corpus.VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     flagged = corpus.decontaminate_from(
-        spark.read.parquet(d).select("doc_id", "text", split.alias("split"))
+        spark.read.parquet(d).select(
+            "doc_id", "text", corpus.split_col(F.col("doc_id")).alias("split")
+        )
     )
     agg = flagged.agg(
         F.count("*").alias("n"),

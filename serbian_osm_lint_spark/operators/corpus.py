@@ -1,22 +1,31 @@
 # -*- coding: utf-8 -*-
-"""Corpus-preparation operators: PII redaction and deterministic splits.
+"""Corpus-preparation operators: PII redaction, deterministic splits,
+test-set decontamination, vocabulary statistics and the training shard.
 
-Two more stages every large-scale training-data pipeline runs over the
-document table:
+Each training-data rule is written once and shared by every face that
+applies it:
 
-* :func:`pii_redact_df` — scrub emails/phone-like tokens from ``text``
-  with native ``regexp_replace`` (JVM-side, codegen; zero Python). The
-  driver corpus has no natural PII, so deterministic contact lines are
-  injected first (same derivation in both engines) — live positives at
-  every scale, like the dedup corpora.
-* :func:`corpus_split_df` — content-hash train/val/test assignment
-  (80/10/10): ``md5(doc_id)`` → 32-bit int → percentile bucket. Pure
+* :func:`_docs_spread` — the ``documents.parquet`` scan spread across
+  the cluster; every corpus face here and ``dedup.with_near_dups_df``
+  start from it.
+* :func:`_redacted` — scrub emails/phone-like tokens from ``text`` with
+  native ``regexp_replace`` (JVM-side, codegen; zero Python), counting
+  them first; :func:`pii_redact_df` and :func:`training_shard_df` both
+  call it. The driver corpus has no natural PII, so deterministic
+  contact lines are injected first (same derivation in both engines) —
+  live positives at every scale, like the dedup corpora.
+* :func:`split_col` — the content-hash train/val/test label (80/10/10):
+  ``md5(doc_id)`` → 32-bit int → percentile bucket → label. Pure
   projection (no shuffle, no RNG) — resume-safe and stable under
   repartitioning, unlike ``rand()`` splits which change on every run
-  and every partitioning.
+  and every partitioning. The batch, streaming and resumable faces all
+  label with it.
+* The planted near-dup copies come from ``dedup.with_planted_copies``
+  (SQL: ``dedup.sql_planted_copies``); the training shard adds only its
+  short stubs.
 
-Both are single-pass projections: at 10^12 docs they pipeline inside the
-same scan stage as any other per-row work.
+The per-row stages are single-pass projections: at 10^12 docs they
+pipeline inside the same scan stage as any other per-row work.
 """
 
 from __future__ import annotations
@@ -27,24 +36,6 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\+[0-9]{5,14}"
 
 TRAIN_PCT, VAL_PCT = 80, 90  # train < 80 <= val < 90 <= test
-
-
-def _inject_pii(docs):
-    """Append deterministic contact lines: doc_id%4==0 gets an email,
-    doc_id%6==0 a phone number (both for doc_id%12==0)."""
-    from pyspark.sql import functions as F
-
-    k = F.col("doc_id")
-    email = F.concat(F.lit(" contact: user"), k.cast("string"), F.lit("@example.com"))
-    phone = F.concat(F.lit(" tel: +3811"), (k % 1000000).cast("string"))
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(k % 4 == 0, email).otherwise(F.lit("")),
-            F.when(k % 6 == 0, phone).otherwise(F.lit("")),
-        ).alias("text"),
-    )
 
 
 def _docs_spread(spark, sf_dir: str):
@@ -67,21 +58,30 @@ def _docs_spread(spark, sf_dir: str):
 
 
 def with_injected_pii_df(spark, sf_dir: str):
-    """documents with the deterministic contact lines appended."""
-    return _inject_pii(_docs_spread(spark, sf_dir))
+    """documents with deterministic contact lines appended: doc_id%4==0
+    gets an email, doc_id%6==0 a phone number (both for doc_id%12==0)."""
+    from pyspark.sql import functions as F
 
-
-def _sql_inject_pii(src: str) -> str:
-    return (
-        f"SELECT doc_id, text "
-        f"|| (CASE WHEN doc_id % 4 = 0 THEN ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END) "
-        f"|| (CASE WHEN doc_id % 6 = 0 THEN ' tel: +3811' || CAST(doc_id % 1000000 AS VARCHAR) ELSE '' END) "
-        f"AS text FROM ({src})"
+    k = F.col("doc_id")
+    email = F.concat(F.lit(" contact: user"), k.cast("string"), F.lit("@example.com"))
+    phone = F.concat(F.lit(" tel: +3811"), (k % 1000000).cast("string"))
+    return _docs_spread(spark, sf_dir).select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.when(k % 4 == 0, email).otherwise(F.lit("")),
+            F.when(k % 6 == 0, phone).otherwise(F.lit("")),
+        ).alias("text"),
     )
 
 
 def sql_with_injected_pii() -> str:
-    return _sql_inject_pii("SELECT doc_id, text FROM documents")
+    return (
+        "SELECT doc_id, text "
+        "|| (CASE WHEN doc_id % 4 = 0 THEN ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END) "
+        "|| (CASE WHEN doc_id % 6 = 0 THEN ' tel: +3811' || CAST(doc_id % 1000000 AS VARCHAR) ELSE '' END) "
+        "AS text FROM (SELECT doc_id, text FROM documents)"
+    )
 
 
 def _sql_shard_corpus() -> str:
@@ -92,23 +92,21 @@ def _sql_shard_corpus() -> str:
     # Mutated copies (+2·10^6, one appended token) are NOT exact dups —
     # they exist so the NEAR-dup keep gate has live negatives (r4 verdict
     # item 2: a production shard keeps one doc per near-dup component).
-    injected = _sql_inject_pii("SELECT doc_id, text FROM documents")
+    from .dedup import sql_planted_copies
+
     return (
-        f"WITH inj AS ({injected}) SELECT doc_id, text FROM inj "
-        "UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM inj WHERE doc_id % 7 = 0 "
-        "UNION ALL SELECT doc_id + 2000000 AS doc_id, text || ' zz_mutation' AS text "
-        "FROM inj WHERE doc_id % 10 = 0 "
+        f"WITH inj AS ({sql_with_injected_pii()}) {sql_planted_copies('inj')} "
         "UNION ALL SELECT doc_id + 3000000 AS doc_id, 'kratak tekst' AS text "
         "FROM inj WHERE doc_id % 13 = 0"
     )
 
 
-def pii_redact_df(spark, sf_dir: str):
-    """(doc_id, clean_text, n_emails, n_phones): emails → [EMAIL],
-    phone-like tokens → [PHONE]; counts from the pre-redaction text."""
+def _redacted(docs):
+    """(doc_id, clean_text, n_emails, n_phones) of a (doc_id, text) frame:
+    emails → [EMAIL], phone-like tokens → [PHONE]; counts from the
+    pre-redaction text."""
     from pyspark.sql import functions as F
 
-    docs = with_injected_pii_df(spark, sf_dir)
     t = F.col("text")
     clean = F.regexp_replace(
         F.regexp_replace(t, EMAIL_RE, "[EMAIL]"), PHONE_RE, "[PHONE]"
@@ -121,6 +119,12 @@ def pii_redact_df(spark, sf_dir: str):
         F.regexp_count(t, F.lit(EMAIL_RE)).cast("int").alias("n_emails"),
         F.regexp_count(t, F.lit(PHONE_RE)).cast("int").alias("n_phones"),
     )
+
+
+def pii_redact_df(spark, sf_dir: str):
+    """(doc_id, clean_text, n_emails, n_phones) over the PII-injected
+    documents (:func:`_redacted`)."""
+    return _redacted(with_injected_pii_df(spark, sf_dir))
 
 
 def sql_pii_redact() -> str:
@@ -169,31 +173,15 @@ def training_shard_df(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..functions.text import fingerprint_col, lang_id_col, token_count_cols
-    from .dedup import components_from, lsh_verified_pairs_from
+    from .dedup import components_from, lsh_verified_pairs_from, with_planted_copies
 
-    raw = _inject_pii(_docs_spread(spark, sf_dir))
-    exact = raw.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    mutated = raw.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz_mutation")).alias("text"),
-    )
+    raw = with_injected_pii_df(spark, sf_dir)
     short = raw.filter(F.col("doc_id") % 13 == 0).select(
         (F.col("doc_id") + 3000000).alias("doc_id"), F.lit("kratak tekst").alias("text")
     )
-    docs = raw.unionByName(exact).unionByName(mutated).unionByName(short)
-    t = F.col("text")
-    clean = F.regexp_replace(
-        F.regexp_replace(t, EMAIL_RE, "[EMAIL]"), PHONE_RE, "[PHONE]"
-    )
+    docs = with_planted_copies(raw).unionByName(short)
     ws, _bpe = token_count_cols(F.col("clean_text"))
-    staged = docs.select(
-        "doc_id",
-        clean.alias("clean_text"),
-        F.regexp_count(t, F.lit(EMAIL_RE)).cast("int").alias("n_emails"),
-        F.regexp_count(t, F.lit(PHONE_RE)).cast("int").alias("n_phones"),
-    ).select(
+    staged = _redacted(docs).select(
         "doc_id",
         "clean_text",
         "n_emails",
@@ -227,15 +215,9 @@ def training_shard_df(spark, sf_dir: str):
     is_near_dup = F.col("component_id").isNotNull() & (
         F.col("component_id") != F.col("doc_id")
     )
-    p = split_col(F.col("doc_id"))
-    split = (
-        F.when(p < TRAIN_PCT, F.lit("train"))
-        .when(p < VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return staged.join(comp, "fp_canon", "left").select(
         "doc_id",
-        split.alias("split"),
+        split_col(F.col("doc_id")).alias("split"),
         "n_tokens_ws",
         "lang_guess",
         "n_emails",
@@ -311,13 +293,19 @@ def sql_training_shard() -> str:
 
 
 def split_col(doc_id_col):
-    """Content-hash split bucket 0..99 from md5(doc_id) — shared by the
-    batch face and any incremental/streaming ingest (same doc always
-    lands in the same split)."""
+    """Content-hash split label (``'train'|'val'|'test'``, 80/10/10) from
+    the bucket ``md5(doc_id) % 100`` — shared by the batch faces and any
+    incremental/streaming ingest (same doc always lands in the same
+    split)."""
     from pyspark.sql import functions as F
 
     h = F.conv(F.substring(F.md5(doc_id_col.cast("string")), 1, 8), 16, 10).cast("long")
-    return F.pmod(h, F.lit(100))
+    p = F.pmod(h, F.lit(100))
+    return (
+        F.when(p < TRAIN_PCT, F.lit("train"))
+        .when(p < VAL_PCT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
 
 
 # ------------------------------------------------------- decontamination
@@ -442,13 +430,9 @@ def decontaminate_df(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     docs = with_contamination_df(spark, sf_dir)
-    p = split_col(F.col("doc_id"))
-    split = (
-        F.when(p < TRAIN_PCT, F.lit("train"))
-        .when(p < VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
+    return decontaminate_from(
+        docs.select("doc_id", "text", split_col(F.col("doc_id")).alias("split"))
     )
-    return decontaminate_from(docs.select("doc_id", "text", split.alias("split")))
 
 
 def sql_decontaminate(n: int = N_CONTAM_GRAM) -> str:
@@ -558,13 +542,7 @@ def corpus_split_df(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    p = split_col(F.col("doc_id"))
-    split = (
-        F.when(p < TRAIN_PCT, F.lit("train"))
-        .when(p < VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return docs.select("doc_id", split.alias("split"))
+    return docs.select("doc_id", split_col(F.col("doc_id")).alias("split"))
 
 
 def sql_corpus_split() -> str:

@@ -66,7 +66,7 @@ from ..functions.text import WS_SPLIT_RE  # noqa: E402
 #: derives the hyperplane count from.
 TARGET_BUCKET_SIZE = 32
 
-#: planted-dup corpus derivation constants (:func:`with_near_dups_df` and
+#: planted-dup corpus derivation constants (:func:`with_planted_copies` and
 #: its SQL twin read these — one definition, two engines).
 EXACT_COPY_MOD = 7
 EXACT_COPY_OFFSET = 1_000_000
@@ -112,22 +112,12 @@ def n_planes_for(n_vectors: int) -> int:
 
 
 # ----------------------------------------------------------- corpus prep
-def with_near_dups_df(spark, sf_dir: str):
-    """documents ∪ exact copies (doc_id%7==0) ∪ mutated copies
-    (doc_id%10==0, one token appended). Copy ids are offset by 10^6/2·10^6."""
+def with_planted_copies(docs):
+    """``docs`` ∪ exact copies (doc_id%7==0) ∪ mutated copies
+    (doc_id%10==0, one token appended) of a (doc_id, text) frame. Copy
+    ids are offset by 10^6/2·10^6."""
     from pyspark.sql import functions as F
 
-    # single-file parquet scans read as ONE partition; the md5/shingle
-    # work is CPU-bound, so spread rows across the cluster first (a real
-    # 100 TB table arrives pre-split into many files/row-groups).
-    # KEYLESS round-robin deliberately: a doc_id-keyed repartition lets
-    # the optimizer push the signature projections below the exchange,
-    # where they run on the 1-2 scan tasks (measured r8: +2.3 s).
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    )
     exact = (
         docs.filter(F.col("doc_id") % EXACT_COPY_MOD == 0)
         .select((F.col("doc_id") + EXACT_COPY_OFFSET).alias("doc_id"), "text")
@@ -142,15 +132,29 @@ def with_near_dups_df(spark, sf_dir: str):
     return docs.unionByName(exact).unionByName(mutated)
 
 
-def sql_with_near_dups() -> str:
+def with_near_dups_df(spark, sf_dir: str):
+    """documents (spread by :func:`..operators.corpus._docs_spread`, so
+    the md5/shingle work above it runs on every core) with the planted
+    copies of :func:`with_planted_copies`."""
+    from .corpus import _docs_spread
+
+    return with_planted_copies(_docs_spread(spark, sf_dir))
+
+
+def sql_planted_copies(src: str) -> str:
+    """SQL twin of :func:`with_planted_copies` over the relation ``src``."""
     return (
-        "SELECT doc_id, text FROM documents "
+        f"SELECT doc_id, text FROM {src} "
         f"UNION ALL SELECT doc_id + {EXACT_COPY_OFFSET} AS doc_id, text "
-        f"FROM documents WHERE doc_id % {EXACT_COPY_MOD} = 0 "
+        f"FROM {src} WHERE doc_id % {EXACT_COPY_MOD} = 0 "
         f"UNION ALL SELECT doc_id + {MUTATED_COPY_OFFSET} AS doc_id, "
         f"text || '{MUTATION_SUFFIX}' AS text "
-        f"FROM documents WHERE doc_id % {MUTATED_COPY_MOD} = 0"
+        f"FROM {src} WHERE doc_id % {MUTATED_COPY_MOD} = 0"
     )
+
+
+def sql_with_near_dups() -> str:
+    return sql_planted_copies("documents")
 
 
 # ------------------------------------------------------------ exact dedup

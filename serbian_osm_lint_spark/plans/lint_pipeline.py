@@ -23,22 +23,16 @@ def sql_verdicts() -> str:
     )
 
 
-def build_verdicts_with_metrics(spark, sf_dir: str):
-    """S9: run metrics via ``observe()`` — the Spark-native replacement for
-    the reference's every-100k progress counter (``src/sources/
-    osm_source.py:28-30``): zero-cost accumulator-style counters collected
-    with the action. Returns (df, observation); read
-    ``observation.get`` after an action."""
-    from pyspark.sql import Observation
+def verdict_metrics(verdicts) -> dict:
+    """S9: run metrics for ``observe()`` — the Spark-native replacement
+    for the reference's every-100k progress counter (``src/sources/
+    osm_source.py:28-30``). Pass as ``metrics_fn`` to
+    :func:`..streaming.resume.run_resumable`: each bucket's manifest then
+    records its error and fixable-error counts next to its row count,
+    collected with the bucket's one write action."""
     from pyspark.sql import functions as F
 
-    obs = Observation("lint_metrics")
-    v = build_verdicts(spark, sf_dir)
-    v = v.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_verdicts"),
-        F.sum((F.col("result") == "CHECKED_ERROR").cast("long")).alias("n_errors"),
-        F.sum((F.col("fixable")).cast("long")).alias("n_fixable"),
-        F.approx_count_distinct("doc_id").alias("approx_docs"),
-    )
-    return v, obs
+    return {
+        "n_errors": F.count(F.when(verdicts["result"] == "CHECKED_ERROR", 1)),
+        "n_fixable": F.count(F.when(verdicts["fixable"], 1)),
+    }

@@ -142,17 +142,27 @@ def cached_table(spark, key: str, build_df, partition_by=None, wait_timeout_s=90
     """
     path = os.path.join(_cache_root(), key)
     marker = os.path.join(path, "_SUCCESS")
-    if os.path.exists(marker):
-        return read_table(spark, path)
     lock = path + ".lock"
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    deadline = time.monotonic() + wait_timeout_s
+    while not os.path.exists(marker):
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            # another builder holds the lock: wait for its marker. If the
+            # lock vanishes while the marker is still absent, that builder
+            # FAILED (its finally released the lock without publishing) —
+            # the next pass elects a builder again (ADVICE r7) instead of
+            # waiting out the full timeout and misdiagnosing a stale lock.
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"timed out waiting for cached table {path} from the "
+                    f"lock holder; if no builder process is alive the lock "
+                    f"file {lock} is stale — remove it and retry"
+                ) from None
+            time.sleep(0.05)
+            continue
         with os.fdopen(fd, "w") as fh:
             fh.write(str(os.getpid()))
-        is_builder = True
-    except FileExistsError:
-        is_builder = False
-    if is_builder:
         try:
             if not os.path.exists(marker):  # may have landed while we locked
                 tmp = f"{path}.tmp.{os.getpid()}"
@@ -170,26 +180,6 @@ def cached_table(spark, key: str, build_df, partition_by=None, wait_timeout_s=90
                 os.rename(tmp, path)
         finally:
             os.unlink(lock)
-    else:
-        deadline = time.monotonic() + wait_timeout_s
-        while not os.path.exists(marker):
-            # ADVICE r7: if the lockfile vanished while the marker is still
-            # absent, the elected builder FAILED (its finally released the
-            # lock without publishing) — re-attempt the build ourselves
-            # instead of waiting out the full timeout and misdiagnosing a
-            # stale lock.
-            if not os.path.exists(lock):
-                return cached_table(
-                    spark, key, build_df, partition_by=partition_by,
-                    wait_timeout_s=wait_timeout_s,
-                )
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"timed out waiting for cached table {path} from the "
-                    f"lock holder; if no builder process is alive the lock "
-                    f"file {lock} is stale — remove it and retry"
-                )
-            time.sleep(0.05)
     return read_table(spark, path)
 
 

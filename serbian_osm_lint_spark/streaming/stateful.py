@@ -17,7 +17,7 @@ import os
 import pandas as pd
 
 from ..operators.events import SESSION_GAP_SEC
-from .stream import _run_available_now, write_batch_idempotent
+from .stream import _run_available_now, arrivals
 
 OUTPUT_SCHEMA = "user_id long, n_sessions long, n_events long"
 STATE_SCHEMA = "last_epoch long, n_sessions long, n_events long"
@@ -74,15 +74,13 @@ def stream_sessionize(spark, events_path: str, out_dir: str, checkpoint_dir: str
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def sink(batch_df, batch_id):
-        # Update-mode batches carry only the users touched in that batch —
-        # each lands in its own batch_id=<id> partition; read_latest() takes
-        # each user's newest row (an overwrite of "latest" would drop
-        # untouched users).
-        write_batch_idempotent(batch_df, os.path.join(out_dir, "updates"), batch_id)
-
-    return _run_available_now(counts, sink, checkpoint_dir, output_mode="update")
+    # Update-mode batches carry only the users touched in that batch —
+    # each lands in its own batch_id=<id> partition; read_latest() takes
+    # each user's newest row (an overwrite of "latest" would drop
+    # untouched users).
+    return _run_available_now(
+        counts, os.path.join(out_dir, "updates"), checkpoint_dir, output_mode="update"
+    )
 
 
 #: streaming as-of join output (timestamps as epoch micros: the state
@@ -136,36 +134,27 @@ def _update_asof(key, pdf_iter, state):
     yield pd.DataFrame(out)
 
 
-def stream_asof_join(
-    spark,
-    events_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    left_type: str = "click",
-    right_type: str = "view",
-) -> int:
-    """Streaming face of the as-of join: one AvailableNow pass with
-    per-user latest-right state carried across micro-batches in the
-    checkpoint. Assumes event-time-ordered file arrival (the standard
-    streaming as-of contract — a production topology enforces it with a
-    watermark + sorted ingest); under that contract streamed output is
-    row-identical to :func:`..operators.events.asof_join_df`
+def stream_asof_join(spark, events_path: str, out_dir: str, checkpoint_dir: str) -> int:
+    """Streaming face of the as-of join of clicks on views (the batch
+    face's default types): one AvailableNow pass with per-user
+    latest-right state carried across micro-batches in the checkpoint.
+    Assumes event-time-ordered file arrival (the standard streaming as-of
+    contract — a production topology enforces it with a watermark +
+    sorted ingest); under that contract streamed output is row-identical
+    to :func:`..operators.events.asof_join_df`
     (tests/test_events_report.py). Returns micro-batches executed."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(events_path).schema
     ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")  # several micro-batches per pass
-        .parquet(events_path)
-        .filter(F.col("event_type").isin(left_type, right_type))
+        arrivals(spark, events_path, spark.read.parquet(events_path).schema)
+        .filter(F.col("event_type").isin("click", "view"))
         .select(
             "user_id",
             "event_id",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
             "value",
-            F.when(F.col("event_type") == right_type, 0).otherwise(1).alias("side"),
+            F.when(F.col("event_type") == "view", 0).otherwise(1).alias("side"),
         )
     )
     enriched = ev.groupBy("user_id").applyInPandasWithState(
@@ -175,11 +164,9 @@ def stream_asof_join(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def sink(batch_df, batch_id):
-        write_batch_idempotent(batch_df, os.path.join(out_dir, "enriched"), batch_id)
-
-    return _run_available_now(enriched, sink, checkpoint_dir, output_mode="append")
+    return _run_available_now(
+        enriched, os.path.join(out_dir, "enriched"), checkpoint_dir, output_mode="append"
+    )
 
 
 def read_latest(spark, out_dir: str):

@@ -6,6 +6,7 @@ half-written table); crashed-builder debris is cleaned up, not served."""
 
 import os
 import threading
+import time
 
 import pytest
 
@@ -84,6 +85,43 @@ def test_waiter_times_out_on_orphaned_lock(spark, cache_root):
             lambda: spark.range(1),
             wait_timeout_s=0.3,
         )
+
+
+def test_waiter_reelects_itself_and_raises_its_own_build_error(spark, cache_root):
+    """Two builders that fail in a row: the lock holder fails while a
+    waiter polls; the waiter re-elects itself, its own build fails too,
+    and it raises that error (not a timeout, not a hang) and releases the
+    lock, so a third call builds and serves the table."""
+    from serbian_osm_lint_spark.sources import catalog
+
+    holding = threading.Event()
+    first_errors = []
+
+    def failing_first():
+        holding.set()
+        time.sleep(0.5)  # the waiter is polling by now
+        raise RuntimeError("first build failed")
+
+    def first():
+        try:
+            catalog.cached_table(spark, "reelect_key", failing_first)
+        except RuntimeError as e:
+            first_errors.append(str(e))
+
+    def failing_second():
+        raise RuntimeError("second build failed")
+
+    t = threading.Thread(target=first)
+    t.start()
+    assert holding.wait(30)
+    with pytest.raises(RuntimeError, match="second build failed"):
+        catalog.cached_table(spark, "reelect_key", failing_second, wait_timeout_s=60)
+    t.join()
+    assert first_errors == ["first build failed"]
+    assert not os.path.exists(os.path.join(cache_root, "reelect_key.lock"))
+
+    df = catalog.cached_table(spark, "reelect_key", lambda: spark.range(7).selectExpr("id"))
+    assert df.count() == 7
 
 
 def test_same_named_data_dirs_get_their_own_stored_tables(spark, cache_root, tmp_path):

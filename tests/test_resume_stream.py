@@ -363,13 +363,7 @@ def test_streaming_decontaminate_equals_batch(spark, tmp_path):
     from serbian_osm_lint_spark.streaming import stream
 
     docs = corpus.with_contamination_df(spark, SF_SMALL)
-    p = corpus.split_col(F.col("doc_id"))
-    split = (
-        F.when(p < corpus.TRAIN_PCT, F.lit("train"))
-        .when(p < corpus.VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    ds = docs.select("doc_id", "text", split.alias("split"))
+    ds = docs.select("doc_id", "text", corpus.split_col(F.col("doc_id")).alias("split"))
     train = ds.filter("split = 'train'").select("doc_id", "text")
     holdout = corpus.holdout_grams_df(ds)
 
@@ -407,13 +401,7 @@ def test_streaming_decontaminate_is_order_independent(spark, tmp_path):
     from serbian_osm_lint_spark.streaming import stream
 
     docs = corpus.with_contamination_df(spark, SF_SMALL)
-    p = corpus.split_col(F.col("doc_id"))
-    split = (
-        F.when(p < corpus.TRAIN_PCT, F.lit("train"))
-        .when(p < corpus.VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    ds = docs.select("doc_id", "text", split.alias("split"))
+    ds = docs.select("doc_id", "text", corpus.split_col(F.col("doc_id")).alias("split"))
     train = ds.filter("split = 'train'").select("doc_id", "text")
     holdout = corpus.holdout_grams_df(ds)
 
@@ -620,13 +608,7 @@ def test_resume_generalizes_to_corpus_op(spark, out_dir):
     from serbian_osm_lint_spark.streaming import resume
 
     docs = corpus.with_contamination_df(spark, SF_SMALL)
-    p = corpus.split_col(F.col("doc_id"))
-    split = (
-        F.when(p < corpus.TRAIN_PCT, F.lit("train"))
-        .when(p < corpus.VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    ds = docs.select("doc_id", "text", split.alias("split"))
+    ds = docs.select("doc_id", "text", corpus.split_col(F.col("doc_id")).alias("split"))
     train = ds.filter("split = 'train'").select("doc_id", "text")
     holdout = corpus.holdout_grams_df(ds)
 
